@@ -45,6 +45,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.types import BooleanType, NumericType
 
+from tempo_spark.functions.sql import ident, str_lit
+
 
 def is_metric_col(field) -> bool:
     return isinstance(field.dataType, (NumericType, BooleanType))
@@ -418,7 +420,7 @@ class IntervalsDF:
             return self.df
         metrics = self.metric_columns
         n = len(metrics)
-        pairs = ", ".join(f"'{m}', `{m}`" for m in metrics)
+        pairs = ", ".join(f"{str_lit(m)}, {ident(m)}" for m in metrics)
         stacked = self.df.select(
             *self.structural_columns,
             F.expr(f"stack({n}, {pairs}) AS (metric_name, metric_value)"),

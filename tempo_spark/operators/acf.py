@@ -30,15 +30,13 @@ from typing import Sequence, Union
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from tempo_spark.functions.grid import grid6
-from tempo_spark.operators.indicators import _grid6_sql, _qn
-
-
-def _sql_str(s: str) -> str:
-    """SQL string literal (C-style escapes, Spark's default literal
-    dialect) — used to carry metric-column NAMES as data in the
-    pairwise output."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+from tempo_spark.functions.sql import (
+    grid6,
+    grid6_sql,
+    ident,
+    over_sql,
+    str_lit,
+)
 
 # Past this many lags the per-lag window form stops being the safe
 # default: each lag adds a window function (its own frame processor at
@@ -89,8 +87,8 @@ def _pearson_from_pairs(ex, group_cols, out_name: str) -> DataFrame:
         f" THEN ({n} * {sxy} - {sx} * {sy}) / sqrt({vx} * {vy}) END"
     )
     return agg.selectExpr(
-        *[_qn(c) for c in group_cols if c != "__ac_g"], "n_pairs",
-        f"{corr} AS {_qn(out_name)}",
+        *[ident(c) for c in group_cols if c != "__ac_g"], "n_pairs",
+        f"{corr} AS {ident(out_name)}",
     )
 
 
@@ -114,7 +112,6 @@ def _lagged_corr(
     if not keys:
         df = df.withColumn("__ac_g", F.lit(0))
         keys = ["__ac_g"]
-    _grid = grid6
 
     # content-hash tiebreak (both strategies): rows tied on (ts[, seq])
     # would otherwise get run-dependent positions — fatal for the join
@@ -135,23 +132,17 @@ def _lagged_corr(
         # re-evaluated grid6(y) inside every lead/lag), and every
         # shifted column parses in ONE selectExpr. Values are pinned by
         # the acf/ccf suites + the twap gate tags.
+        xg, yg = grid6_sql(ident(x_col)), grid6_sql(ident(y_col))
         ob = ["__ac_o ASC"]
         if getattr(tsdf, "sequence_col", None):
-            ob.append(_qn(tsdf.sequence_col) + " ASC")
+            ob.append(ident(tsdf.sequence_col) + " ASC")
         ob.append("__ac_h ASC")
-        ov = (
-            "OVER (PARTITION BY "
-            + ", ".join(_qn(k) for k in keys)
-            + " ORDER BY " + ", ".join(ob) + ")"
-        )
+        ov = over_sql([ident(k) for k in keys], ob)
         staged = df.select(
             "*",
             tsdf._exact_micros_order().alias("__ac_o"),
-            F.expr(
-                f"xxhash64({_grid6_sql(x_col)}, {_grid6_sql(y_col)})"
-                " AS __ac_h"
-            ),
-            F.expr(f"{_grid6_sql(y_col)} AS __ac_yg"),
+            F.expr(f"xxhash64({xg}, {yg}) AS __ac_h"),
+            F.expr(f"{yg} AS __ac_yg"),
         )
         names = [
             f"__ac_y_{'m' if lag < 0 else ''}{abs(lag)}" for lag in lag_list
@@ -162,8 +153,8 @@ def _lagged_corr(
             for lag, nm in zip(lag_list, names)
         ]
         staged = staged.selectExpr(
-            *[_qn(k) for k in keys],
-            f"{_grid6_sql(x_col)} AS __ac_x",
+            *[ident(k) for k in keys],
+            f"{xg} AS __ac_x",
             *shifted,
         )
         structs = ", ".join(
@@ -174,7 +165,7 @@ def _lagged_corr(
             staged.select(*keys, F.col("__ac_x").alias("x"),
                           F.expr(f"explode(array({structs}))").alias("p"))
             .selectExpr(
-                *[_qn(k) for k in keys], "p.lag AS lag", "x", "p.y AS y"
+                *[ident(k) for k in keys], "p.lag AS lag", "x", "p.y AS y"
             )
             .where(F.expr("(x IS NOT NULL) AND (y IS NOT NULL)"))
         )
@@ -182,7 +173,7 @@ def _lagged_corr(
         order = [tsdf._exact_micros_order()]
         if getattr(tsdf, "sequence_col", None):
             order.append(F.col(tsdf.sequence_col))
-        order.append(F.xxhash64(_grid(x_col), _grid(y_col)))
+        order.append(F.xxhash64(grid6(x_col), grid6(y_col)))
         w = Window.partitionBy(*[F.col(c) for c in keys]).orderBy(*order)
         # wide lag sweep: pair rows by a position self-join — the lag
         # table broadcasts, the join is an equi-join on
@@ -191,8 +182,8 @@ def _lagged_corr(
         base = df.select(
             *keys,
             pos.alias("__ac_pos"),
-            _grid(x_col).alias("__ac_x"),
-            _grid(y_col).alias("__ac_yb"),
+            grid6(x_col).alias("__ac_x"),
+            grid6(y_col).alias("__ac_yb"),
         )
         lagf = tsdf.df.sparkSession.createDataFrame(
             [(int(l),) for l in lag_list], "lag int"
@@ -292,8 +283,8 @@ def pairwise_corr(tsdf, metric_cols) -> DataFrame:
     # as string literals + both value grids) parse as ONE expression
     # instead of ~150 py4j round trips per pair
     structs = ", ".join(
-        f"struct({_sql_str(a)} AS x_col, {_sql_str(b)} AS y_col,"
-        f" {_grid6_sql(a)} AS x, {_grid6_sql(b)} AS y)"
+        f"struct({str_lit(a)} AS x_col, {str_lit(b)} AS y_col,"
+        f" {grid6_sql(ident(a))} AS x, {grid6_sql(ident(b))} AS y)"
         for a, b in pairs
     )
     ex = (

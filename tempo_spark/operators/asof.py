@@ -46,6 +46,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window
 
+from tempo_spark.functions.sql import RUNNING, ident, over_sql
 from tempo_spark.functions.timestamps import ts_to_double
 
 #: sql_join_opt size cutoff — a side whose Catalyst-estimated plan size
@@ -675,28 +676,26 @@ def asof_join_many(
     # struct's field is null, so last(..., ignorenulls) sees exactly the
     # rows of that side (plus that side's genuine nulls, which
     # skip_nulls=True is defined to skip).
-    def bq(name: str) -> str:
-        return "`" + name.replace("`", "``") + "`"
-
-    over = (
-        "OVER (PARTITION BY "
-        + ", ".join(bq(s) for s in series)
-        + f" ORDER BY {bq(_CTS)} ASC, {bq(_TIE)} "
-        + ("ASC" if allow_exact_matches else "DESC")
-        + " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    over = over_sql(
+        [ident(s) for s in series],
+        [
+            f"{ident(_CTS)} ASC",
+            f"{ident(_TIE)} " + ("ASC" if allow_exact_matches else "DESC"),
+        ],
+        RUNNING,
     )
     sel_for: dict[str, str] = {}
     for c in l_vals:
-        sel_for[c] = f"{bq(side_name(0))}.{bq(c)}"
+        sel_for[c] = f"{ident(side_name(0))}.{ident(c)}"
     for i, _p, _rdf, _ts, vals in sides:
-        sref = bq(side_name(i))
+        sref = ident(side_name(i))
         for c in vals:
             if skip_nulls:
-                sel_for[c] = f"last({sref}.{bq(c)}, true) {over}"
+                sel_for[c] = f"last({sref}.{ident(c)}, true) {over}"
             else:
                 sel_for[c] = (
-                    f"(last(CASE WHEN {bq(_REC_IND)} = {i} "
-                    f"THEN struct({sref}.{bq(c)} AS v) END, true) {over}).v"
+                    f"(last(CASE WHEN {ident(_REC_IND)} = {i} "
+                    f"THEN struct({sref}.{ident(c)} AS v) END, true) {over}).v"
                 )
     filled = keyed.select(
         *series,

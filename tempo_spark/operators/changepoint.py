@@ -40,7 +40,7 @@ from typing import Optional
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from tempo_spark.operators.indicators import _grid6_sql, _qn
+from tempo_spark.functions.sql import RUNNING, grid6_sql, ident, over_sql
 
 
 def _best_splits(tsdf, base: DataFrame, keys, part_cols) -> DataFrame:
@@ -53,15 +53,14 @@ def _best_splits(tsdf, base: DataFrame, keys, part_cols) -> DataFrame:
     # and every window/score fragment parses in one batch instead of
     # ~1,100 py4j round trips per round. Values pinned by the
     # changepoint suite + the twap cpt/cpt_nl gate tags.
-    part = ", ".join(_qn(c) for c in part_cols)
+    part = [ident(c) for c in part_cols]
     ob = ["__cp_o ASC"]
     if getattr(tsdf, "sequence_col", None):
-        ob.append(_qn(tsdf.sequence_col) + " ASC")
+        ob.append(ident(tsdf.sequence_col) + " ASC")
     ob.append("__cp_h ASC")
-    ov = f"PARTITION BY {part} ORDER BY {', '.join(ob)}"
-    wov = f"OVER ({ov})"
-    wfr = f"OVER ({ov} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-    wall = f"OVER (PARTITION BY {part})"
+    wov = over_sql(part, ob)
+    wfr = over_sql(part, ob, RUNNING)
+    wall = over_sql(part)
     staged = base.select(
         "*",
         tsdf._exact_micros_order().alias("__cp_o"),
@@ -69,8 +68,8 @@ def _best_splits(tsdf, base: DataFrame, keys, part_cols) -> DataFrame:
     )
     ydec = "cast(__cp_y as decimal(18,6))"
     staged = staged.selectExpr(
-        *[_qn(c) for c in part_cols],
-        _qn(tsdf.ts_col),
+        *[ident(c) for c in part_cols],
+        ident(tsdf.ts_col),
         f"row_number() {wov} AS __cp_k",
         f"sum({ydec}) {wfr} AS __cp_s",
         f"sum({ydec}) {wall} AS __cp_tot",
@@ -86,17 +85,16 @@ def _best_splits(tsdf, base: DataFrame, keys, part_cols) -> DataFrame:
     d = f"({ml} - {mr})"
     score = f"({k} * {nr} / {n}) * ({d} * {d})"
     scored = staged.where("__cp_k < __cp_n").selectExpr(
-        *[_qn(c) for c in part_cols],
-        f"{_qn(tsdf.ts_col)} AS split_ts",
+        *[ident(c) for c in part_cols],
+        f"{ident(tsdf.ts_col)} AS split_ts",
         "__cp_k AS n_left",
         "__cp_n AS n",
         f"{ml} AS mean_left",
         f"{mr} AS mean_right",
         f"{score} AS score",
     )
-    pick = (
-        f"OVER (PARTITION BY {part} ORDER BY"
-        " score DESC NULLS LAST, split_ts ASC, n_left ASC)"
+    pick = over_sql(
+        part, ["score DESC NULLS LAST", "split_ts ASC", "n_left ASC"]
     )
     return (
         scored.selectExpr("*", f"row_number() {pick} AS __cp_r")
@@ -118,9 +116,8 @@ def _prepared(tsdf, value_col: str):
         keys = ["__cp_g"]
     # one-parse grid (r13): the Column-form grid6 costs ~107 py4j trips
     # per call site; F.expr of its SQL twin builds the same tree in one
-    base = df.withColumn("__cp_y", F.expr(_grid6_sql(value_col))).where(
-        F.col("__cp_y").isNotNull()
-    )
+    yq = F.expr(grid6_sql(ident(value_col)))
+    base = df.withColumn("__cp_y", yq).where(F.col("__cp_y").isNotNull())
     return base, keys
 
 

@@ -29,7 +29,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from tempo_spark.functions.freq import parse_freq
-from tempo_spark.operators.indicators import _grid6_sql, _qn
+from tempo_spark.functions.sql import grid6_sql, ident, over_sql
+
 
 def _step_micros(freq: str) -> int:
     """Exact integer micros per step, derived from freq._UNITS (the one
@@ -80,7 +81,7 @@ def forecast_naive(
         keys = ["__fc_g"]
     # one-parse grid (r13): same tree as grid6(value_col), ~107 fewer
     # py4j trips per forecast call
-    yq = F.expr(_grid6_sql(value_col))
+    yq = F.expr(grid6_sql(ident(value_col)))
     micros = tsdf._exact_micros_order()
     base = df.select(
         *keys, micros.alias("__fc_us"), yq.alias("__fc_y")
@@ -355,18 +356,14 @@ def forecast_ets(
     base = df.select(
         "*", micros.alias("__fc_us")
     ).selectExpr(
-        *[_qn(k) for k in keys], "__fc_us",
-        f"{_grid6_sql(value_col)} AS __fc_y",
+        *[ident(k) for k in keys], "__fc_us",
+        f"{grid6_sql(ident(value_col))} AS __fc_y",
     ).where("__fc_y IS NOT NULL")
 
-    qkeys = ", ".join(_qn(k) for k in keys)
+    newest = over_sql([ident(k) for k in keys], ["__fc_us DESC"])
     ord_struct = "struct(__fc_us AS us, __fc_y AS y)"
     per = (
-        base.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY " + qkeys
-            + " ORDER BY __fc_us DESC) AS __fc_rd",
-        )
+        base.selectExpr("*", f"row_number() {newest} AS __fc_rd")
         .groupBy(*keys)
         .agg(
             F.expr(f"max({ord_struct}) AS __fc_last"),
@@ -424,11 +421,11 @@ def forecast_ets(
             F.expr(f"explode(sequence(1, {int(horizon)}))").alias("h"),
         )
         .selectExpr(
-            *[_qn(c) for c in keys if c != "__fc_g"],
+            *[ident(c) for c in keys if c != "__fc_g"],
             "h",
             "timestamp_micros(__fc_last.us"
             f" + cast(h as long) * {int(step_micros)})"
-            f" AS {_qn(tsdf.ts_col)}",
+            f" AS {ident(tsdf.ts_col)}",
             f"{yhat} AS yhat",
         )
     )

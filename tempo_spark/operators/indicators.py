@@ -29,35 +29,21 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.window import Window
 
+from tempo_spark.functions.sql import RUNNING, grid6_sql, ident, over_sql
 
 
-
-def _qn(name: str) -> str:
-    """Backtick-quote a column name for embedding in a SQL fragment."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _ov_sql(tsdf) -> str:
-    """The base_window PARTITION BY/ORDER BY clause as SQL text — the
+def _base_over(tsdf, frame: str = "") -> str:
+    """``tsdf.base_window()`` (plus ``frame``) as an OVER clause — the
     r12 plan-build discipline: indicators are built as one parsed
     expression per output column instead of hundreds of py4j round trips
     (bit-identical trees, pinned in tests/test_indicators.py)."""
-    part = ", ".join(_qn(c) for c in tsdf.series_ids)
-    order = [_qn(tsdf.ts_col)]
+    order = [tsdf.ts_col]
     if getattr(tsdf, "sequence_col", None):
-        order.append(_qn(tsdf.sequence_col))
-    return (
-        ("PARTITION BY " + part + " " if part else "")
-        + "ORDER BY " + ", ".join(o + " ASC" for o in order)
-    )
-
-
-def _grid6_sql(name: str) -> str:
-    """SQL text of :func:`grid6` over a column name — same expression."""
-    d = f"cast({_qn(name)} as double)"
-    return (
-        f"(CASE WHEN {d} IS NOT NULL AND NOT isnan({d}) "
-        f"THEN floor({d} * 1000000.0D + 0.5D) / 1000000.0D END)"
+        order.append(tsdf.sequence_col)
+    return over_sql(
+        [ident(c) for c in tsdf.series_ids],
+        [ident(c) + " ASC" for c in order],
+        frame,
     )
 
 
@@ -76,7 +62,7 @@ def with_rsi(
             f"output column {out!r} or __ti_* staging already present"
         )
     w = tsdf.base_window()  # ROWS frames only need the (ts[,seq]) order
-    yq = F.expr(_grid6_sql(value_col))  # one-parse grid (r13)
+    yq = F.expr(grid6_sql(ident(value_col)))  # one-parse grid (r13)
     diff = yq - F.lag(yq).over(w)  # grid subtraction: exact at 1e-6
     frame = w.rowsBetween(-(window - 1), 0)
     staged = tsdf.df.withColumn("__ti_d", diff)
@@ -112,7 +98,7 @@ def with_bollinger(
         raise ValueError(f"reserved output columns present: {clash}")
     w = tsdf.base_window()
     frame = w.rowsBetween(-(window - 1), 0)
-    yq = F.expr(_grid6_sql(value_col))  # one-parse grid (r13)
+    yq = F.expr(grid6_sql(ident(value_col)))  # one-parse grid (r13)
     ydec = yq.cast("decimal(18,6)")
     s = F.sum(ydec).over(frame).cast("double")
     q = F.sum(ydec * ydec).over(frame).cast("double")
@@ -222,10 +208,12 @@ def with_atr(
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
     _ohlc_guard(tsdf, (high_col, low_col, close_col), (out,))
-    ov = _ov_sql(tsdf)
-    fr = f"ROWS BETWEEN {window - 1} PRECEDING AND CURRENT ROW"
-    hq, lq, cq = _grid6_sql(high_col), _grid6_sql(low_col), _grid6_sql(close_col)
-    pc = f"lag({cq}) OVER ({ov})"
+    ov = _base_over(tsdf)
+    fr = _base_over(
+        tsdf, f"ROWS BETWEEN {window - 1} PRECEDING AND CURRENT ROW"
+    )
+    hq, lq, cq = (grid6_sql(ident(c)) for c in (high_col, low_col, close_col))
+    pc = f"lag({cq}) {ov}"
     tr = (
         f"(CASE WHEN {hq} IS NOT NULL AND {lq} IS NOT NULL THEN "
         f"(CASE WHEN {pc} IS NOT NULL THEN "
@@ -234,15 +222,15 @@ def with_atr(
     )
     staged = tsdf.df.selectExpr("*", f"{tr} AS __ti_tr")
     full = (
-        f"(count(1) OVER ({ov} {fr}) = {window}) AND "
-        f"(count(__ti_tr) OVER ({ov} {fr}) = {window})"
+        f"(count(1) {fr} = {window}) AND "
+        f"(count(__ti_tr) {fr} = {window})"
     )
     atr = (
         f"(CASE WHEN {full} THEN "
-        f"cast(sum(cast(__ti_tr as decimal(18,6))) OVER ({ov} {fr}) "
+        f"cast(sum(cast(__ti_tr as decimal(18,6))) {fr} "
         f"as double) / {float(window)!r}D END)"
     )
-    return staged.selectExpr("*", f"{atr} AS {_qn(out)}").drop("__ti_tr")
+    return staged.selectExpr("*", f"{atr} AS {ident(out)}").drop("__ti_tr")
 
 
 def with_stochastic(
@@ -266,40 +254,38 @@ def with_stochastic(
         raise ValueError(f"d_window must be >= 1, got {d_window}")
     outs = (f"{prefix}_k", f"{prefix}_d")
     _ohlc_guard(tsdf, (high_col, low_col, close_col), outs)
-    ov = _ov_sql(tsdf)
-    kfr = f"ROWS BETWEEN {k_window - 1} PRECEDING AND CURRENT ROW"
-    hq, lq, cq = _grid6_sql(high_col), _grid6_sql(low_col), _grid6_sql(close_col)
-    hh = f"max({hq}) OVER ({ov} {kfr})"
-    ll = f"min({lq}) OVER ({ov} {kfr})"
+    kfr = _base_over(
+        tsdf, f"ROWS BETWEEN {k_window - 1} PRECEDING AND CURRENT ROW"
+    )
+    hq, lq, cq = (grid6_sql(ident(c)) for c in (high_col, low_col, close_col))
+    hh = f"max({hq}) {kfr}"
+    ll = f"min({lq}) {kfr}"
     full_k = (
-        f"(count(1) OVER ({ov} {kfr}) = {k_window}) AND "
-        f"(count({hq}) OVER ({ov} {kfr}) = {k_window}) AND "
-        f"(count({lq}) OVER ({ov} {kfr}) = {k_window})"
+        f"(count(1) {kfr} = {k_window}) AND "
+        f"(count({hq}) {kfr} = {k_window}) AND "
+        f"(count({lq}) {kfr} = {k_window})"
     )
     k = (
         f"(CASE WHEN ({full_k}) AND {cq} IS NOT NULL AND ({hh} > {ll}) "
         f"THEN 100.0D * ({cq} - {ll}) / ({hh} - {ll}) END)"
     )
-    # quantized %K so the %D mean replays exactly (see docstring); grid6
-    # over the %K EXPRESSION (not a column name) — inline the same guard
-    kd = f"cast({k} as double)"
-    kq = (
-        f"(CASE WHEN {kd} IS NOT NULL AND NOT isnan({kd}) "
-        f"THEN floor({kd} * 1000000.0D + 0.5D) / 1000000.0D END)"
-    )
+    # quantized %K so the %D mean replays exactly (see docstring)
+    kq = grid6_sql(k)
     staged = tsdf.df.selectExpr("*", f"{kq} AS __ti_kq")
-    dfr = f"ROWS BETWEEN {d_window - 1} PRECEDING AND CURRENT ROW"
+    dfr = _base_over(
+        tsdf, f"ROWS BETWEEN {d_window - 1} PRECEDING AND CURRENT ROW"
+    )
     full_d = (
-        f"(count(1) OVER ({ov} {dfr}) = {d_window}) AND "
-        f"(count(__ti_kq) OVER ({ov} {dfr}) = {d_window})"
+        f"(count(1) {dfr} = {d_window}) AND "
+        f"(count(__ti_kq) {dfr} = {d_window})"
     )
     d = (
         f"(CASE WHEN {full_d} THEN "
-        f"cast(sum(cast(__ti_kq as decimal(18,6))) OVER ({ov} {dfr}) "
+        f"cast(sum(cast(__ti_kq as decimal(18,6))) {dfr} "
         f"as double) / {float(d_window)!r}D END)"
     )
     return staged.selectExpr(
-        "*", f"__ti_kq AS {_qn(outs[0])}", f"{d} AS {_qn(outs[1])}"
+        "*", f"__ti_kq AS {ident(outs[0])}", f"{d} AS {ident(outs[1])}"
     ).drop("__ti_kq")
 
 
@@ -317,21 +303,22 @@ def with_williams_r(
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
     _ohlc_guard(tsdf, (high_col, low_col, close_col), (out,))
-    ov = _ov_sql(tsdf)
-    fr = f"ROWS BETWEEN {window - 1} PRECEDING AND CURRENT ROW"
-    hq, lq, cq = _grid6_sql(high_col), _grid6_sql(low_col), _grid6_sql(close_col)
-    hh = f"max({hq}) OVER ({ov} {fr})"
-    ll = f"min({lq}) OVER ({ov} {fr})"
+    fr = _base_over(
+        tsdf, f"ROWS BETWEEN {window - 1} PRECEDING AND CURRENT ROW"
+    )
+    hq, lq, cq = (grid6_sql(ident(c)) for c in (high_col, low_col, close_col))
+    hh = f"max({hq}) {fr}"
+    ll = f"min({lq}) {fr}"
     full = (
-        f"(count(1) OVER ({ov} {fr}) = {window}) AND "
-        f"(count({hq}) OVER ({ov} {fr}) = {window}) AND "
-        f"(count({lq}) OVER ({ov} {fr}) = {window})"
+        f"(count(1) {fr} = {window}) AND "
+        f"(count({hq}) {fr} = {window}) AND "
+        f"(count({lq}) {fr} = {window})"
     )
     r = (
         f"(CASE WHEN ({full}) AND {cq} IS NOT NULL AND ({hh} > {ll}) "
         f"THEN -100.0D * ({hh} - {cq}) / ({hh} - {ll}) END)"
     )
-    return tsdf.df.selectExpr("*", f"{r} AS {_qn(out)}")
+    return tsdf.df.selectExpr("*", f"{r} AS {ident(out)}")
 
 
 def with_obv(
@@ -353,10 +340,10 @@ def with_obv(
     GROWING frame (incremental O(rows), order-independent exact sum) —
     the output replays bit-for-bit cross-engine."""
     _ohlc_guard(tsdf, (close_col, volume_col), (out,))
-    ov = _ov_sql(tsdf)
-    cq = _grid6_sql(close_col)
-    vq = _grid6_sql(volume_col)
-    prev = f"lag({cq}) OVER ({ov})"
+    ov = _base_over(tsdf)
+    cq = grid6_sql(ident(close_col))
+    vq = grid6_sql(ident(volume_col))
+    prev = f"lag({cq}) {ov}"
     signed = (
         f"cast((CASE WHEN {cq} IS NOT NULL AND {prev} IS NOT NULL "
         f"AND {vq} IS NOT NULL THEN "
@@ -365,9 +352,8 @@ def with_obv(
         f"ELSE 0.0D END) as decimal(28,6))"
     )
     staged = tsdf.df.selectExpr("*", f"{signed} AS __ti_sv")
-    grow = f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
-    obv = f"cast(sum(__ti_sv) OVER ({ov} {grow}) as double)"
-    return staged.selectExpr("*", f"{obv} AS {_qn(out)}").drop("__ti_sv")
+    obv = f"cast(sum(__ti_sv) {_base_over(tsdf, RUNNING)} as double)"
+    return staged.selectExpr("*", f"{obv} AS {ident(out)}").drop("__ti_sv")
 
 
 def with_cusum(
@@ -407,7 +393,7 @@ def with_cusum(
         raise ValueError(f"h must be positive, got {h}")
     w = tsdf.base_window()
     grow = w.rowsBetween(Window.unboundedPreceding, 0)
-    yq = F.expr(_grid6_sql(value_col))  # one-parse grid (r13)
+    yq = F.expr(grid6_sql(ident(value_col)))  # one-parse grid (r13)
     if target is None:
         full = w.rowsBetween(
             Window.unboundedPreceding, Window.unboundedFollowing

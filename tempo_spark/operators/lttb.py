@@ -26,8 +26,9 @@ offset from the series' first observation, integral; y hardened-rounded
 to the 1e-6 grid), so the sums are order-independent; the area is then a
 FIXED IEEE expression over those exact sums, making the per-bucket
 arg-max replayable bit-for-bit by an external engine. Ties break by
-earliest timestamp; NULL metric rows never win a bucket — unless the
-bucket is entirely NULL, in which case its earliest row is emitted
+earliest timestamp; NULL (or NaN — the grid reads NaN as NULL) metric
+rows never win a bucket — unless the bucket is entirely NULL, in which
+case its earliest row is emitted
 (every area is NULL, so the tie-break alone decides; same contract as
 ``downsample_minmax``).
 """
@@ -37,6 +38,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from tempo_spark.functions.sql import grid6_sql, ident
 
 
 def downsample_lttb(tsdf, n_out: int, value_col: str) -> DataFrame:
@@ -68,7 +70,7 @@ def downsample_lttb(tsdf, n_out: int, value_col: str) -> DataFrame:
     # y on the 1e-6 grid (hardened rounding — the cross-engine idiom) so
     # bucket sums can be EXACT decimals; x = µs offset from the series'
     # first observation (small integral values, decimal headroom)
-    yq = F.floor(F.col(value_col).cast("double") * 1e6 + F.lit(0.5)) / F.lit(1e6)
+    yq = F.expr(grid6_sql(ident(value_col)))
     base = (
         df.withColumn("__lt_pos", F.row_number().over(w))
         .withColumn("__lt_n", F.count(F.lit(1)).over(wall))
@@ -214,7 +216,7 @@ def downsample_minmax(tsdf, n_buckets: int, value_col: str) -> DataFrame:
         order.append(F.col(tsdf.sequence_col))
     w = Window.partitionBy(*series).orderBy(*order)
     wall = Window.partitionBy(*series)
-    yq = F.floor(F.col(value_col).cast("double") * 1e6 + F.lit(0.5)) / F.lit(1e6)
+    yq = F.expr(grid6_sql(ident(value_col)))
     base = (
         df.withColumn("__lt_pos", F.row_number().over(w))
         .withColumn("__lt_n", F.count(F.lit(1)).over(wall))

@@ -25,6 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column
 
 from tempo_spark.functions.freq import parse_freq
+from tempo_spark.functions.sql import ident
 
 # floor/mean/min/max/ceil are reference parity (python/tempo/resample.py:
 # 114-253); sum/count/median extend the same one-shuffle groupBy shape
@@ -291,13 +292,11 @@ def calc_bars(
     # projection parse in single batches instead of ~1,000 py4j round
     # trips (same trees as the former Column chain; values pinned by
     # the resample suite + the ohlc_bars gate entry)
-    from tempo_spark.operators.indicators import _qn
-
-    order_cols = [f"{_qn(ts)} AS __ts"]
+    order_cols = [f"{ident(ts)} AS __ts"]
     if tsdf.sequence_col:
-        order_cols.append(f"{_qn(tsdf.sequence_col)} AS __seq")
+        order_cols.append(f"{ident(tsdf.sequence_col)} AS __seq")
     packed = "struct(" + ", ".join(
-        order_cols + [f"{_qn(c)} AS {_qn(c)}" for c in metric_cols]
+        order_cols + [f"{ident(c)} AS {ident(c)}" for c in metric_cols]
     ) + ")"
 
     aggs: list[Column] = [
@@ -305,8 +304,8 @@ def calc_bars(
         F.expr(f"max({packed}) AS __last"),
     ]
     for c in metric_cols:
-        aggs.append(F.expr(f"min({_qn(c)}) AS {_qn('low_' + c)}"))
-        aggs.append(F.expr(f"max({_qn(c)}) AS {_qn('high_' + c)}"))
+        aggs.append(F.expr(f"min({ident(c)}) AS {ident('low_' + c)}"))
+        aggs.append(F.expr(f"max({ident(c)}) AS {ident('high_' + c)}"))
 
     # no automatic fill repartition — see the negative-result note in
     # resample()
@@ -314,18 +313,18 @@ def calc_bars(
     out_cols = []
     for c in metric_cols:
         out_cols += [
-            f"__first.{_qn(c)} AS {_qn('open_' + c)}",
-            _qn(f"low_{c}"),
-            _qn(f"high_{c}"),
-            f"__last.{_qn(c)} AS {_qn('close_' + c)}",
+            f"__first.{ident(c)} AS {ident('open_' + c)}",
+            ident(f"low_{c}"),
+            ident(f"high_{c}"),
+            f"__last.{ident(c)} AS {ident('close_' + c)}",
         ]
     out = agged.selectExpr(
-        *[_qn(s) for s in series], _qn(ts), *out_cols
+        *[ident(s) for s in series], ident(ts), *out_cols
     )
     # deterministic column order: series, ts, then sorted bar columns
     bar_names = sorted([f"{p}_{c}" for c in metric_cols for p in ("open", "low", "high", "close")])
     out = out.selectExpr(
-        *[_qn(s) for s in series], _qn(ts), *[_qn(b) for b in bar_names]
+        *[ident(s) for s in series], ident(ts), *[ident(b) for b in bar_names]
     )
 
     if fill:

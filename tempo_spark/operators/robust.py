@@ -19,17 +19,13 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from tempo_spark.operators.indicators import _grid6_sql, _qn
-
-
-def _fmt_d(x: float) -> str:
-    """Shortest-round-trip SQL double literal (repr parses back to the
-    identical IEEE double; ``D`` pins DoubleType) — the seasonal.py
-    idiom."""
-    v = float(x)
-    if not (v == v and abs(v) != float("inf")):
-        raise ValueError(f"non-finite literal: {x!r}")
-    return repr(v) + "D"
+from tempo_spark.functions.sql import (
+    RUNNING,
+    double_lit,
+    grid6_sql,
+    ident,
+    over_sql,
+)
 
 
 def with_drawdown(
@@ -51,15 +47,11 @@ def with_drawdown(
     # expression materializes once as __rb_o (projected below the Window
     # by Catalyst anyway, pruned after), the three outputs parse in one
     # batch. Values pinned by the drawdown suite + the ema dd gate tag.
-    part = ", ".join(_qn(c) for c in keys) if keys else "0"
     ob = ["__rb_o ASC"]
     if getattr(tsdf, "sequence_col", None):
-        ob.append(_qn(tsdf.sequence_col) + " ASC")
-    wfr = (
-        f"OVER (PARTITION BY {part} ORDER BY {', '.join(ob)}"
-        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-    )
-    yq = _grid6_sql(value_col)
+        ob.append(ident(tsdf.sequence_col) + " ASC")
+    wfr = over_sql([ident(c) for c in keys] or ["0"], ob, RUNNING)
+    yq = grid6_sql(ident(value_col))
     peak = f"max({yq}) {wfr}"
     staged = df.select("*", tsdf._exact_micros_order().alias("__rb_o"))
     # materialize the window fragment ONCE as `peak` and derive the two
@@ -71,9 +63,9 @@ def with_drawdown(
     staged = staged.selectExpr("*", f"{peak} AS peak")
     return staged.selectExpr(
         "*",
-        f"peak - {yq} AS {_qn(out)}",
+        f"peak - {yq} AS {ident(out)}",
         f"CASE WHEN peak != 0"
-        f" THEN (peak - {yq}) / peak END AS {_qn(out_pct)}",
+        f" THEN (peak - {yq}) / peak END AS {ident(out_pct)}",
     ).drop("__rb_o")
 
 
@@ -108,10 +100,10 @@ def winsorize(
     # r12 one-parse plan build: the guard/percentile/clip fragments parse
     # in single batches (same trees as the former Column chain; values
     # pinned by the winsorize suite + the ema wz gate tag).
-    d = f"cast({_qn(value_col)} as double)"
+    d = f"cast({ident(value_col)} as double)"
     v = f"(CASE WHEN {d} IS NOT NULL AND NOT isnan({d}) THEN {d} END)"
-    lo_agg = F.expr(f"percentile({v}, {_fmt_d(lower)}) AS __wz_lo")
-    hi_agg = F.expr(f"percentile({v}, {_fmt_d(upper)}) AS __wz_hi")
+    lo_agg = F.expr(f"percentile({v}, {double_lit(lower)}) AS __wz_lo")
+    hi_agg = F.expr(f"percentile({v}, {double_lit(upper)}) AS __wz_hi")
     if not keys:
         # global percentiles via a windowless aggregate broadcast back
         bounds = df.agg(lo_agg, hi_agg)
@@ -132,7 +124,7 @@ def winsorize(
     return joined.selectExpr(
         "*",
         f"CASE WHEN {v} IS NOT NULL"
-        f" THEN least(greatest({v}, __wz_lo), __wz_hi) END AS {_qn(out)}",
+        f" THEN least(greatest({v}, __wz_lo), __wz_hi) END AS {ident(out)}",
     ).drop("__wz_lo", "__wz_hi")
 
 
@@ -192,7 +184,7 @@ def with_rolling_quantile(
         )
     w = tsdf.base_window()
     frame = w.rowsBetween(-(window - 1), 0)
-    yq = F.expr(_grid6_sql(value_col))  # one-parse grid (r13)
+    yq = F.expr(grid6_sql(ident(value_col)))  # one-parse grid (r13)
     # collect_list skips NULL inputs already — no struct wrap needed
     arr = F.array_sort(F.collect_list(yq).over(frame))
     staged = tsdf.df.withColumn("__rq_a", arr)
@@ -266,7 +258,7 @@ def with_hampel(
         raise ValueError(f"reserved output/staging columns present: {clash}")
     w = tsdf.base_window()
     frame = w.rowsBetween(-(window - 1), 0)
-    yq = F.expr(_grid6_sql(value_col))  # one-parse grid (r13)
+    yq = F.expr(grid6_sql(ident(value_col)))  # one-parse grid (r13)
     staged = tsdf.df.withColumn(
         "__hp_a", F.array_sort(F.collect_list(yq).over(frame))
     )

@@ -28,7 +28,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from tempo_spark.operators.indicators import _grid6_sql
+from tempo_spark.functions.sql import grid6_sql, ident
 
 
 # Equiprobable standard-normal breakpoints for alphabet sizes 2..10 —
@@ -87,7 +87,7 @@ def sax_transform(
     if any(c.startswith("__sx_") for c in tsdf.df.columns):
         raise ValueError("reserved staging columns __sx_* present in input")
     series = [F.col(c) for c in tsdf.series_ids]
-    yq = F.expr(_grid6_sql(value_col))  # one-parse grid (r13)
+    yq = F.expr(grid6_sql(ident(value_col)))  # one-parse grid (r13)
     base = tsdf.df.where(yq.isNotNull()).select(
         *tsdf.series_ids, *(
             [tsdf.ts_col] + ([tsdf.sequence_col] if tsdf.sequence_col else [])

@@ -24,37 +24,24 @@ OBSERVATION-based — resample first for calendar periods.
 Determinism contract (the ACF idiom): values quantize to the 1e-6 grid;
 window/bucket sums accumulate as exact decimals; every division is a
 fixed IEEE op over those exact sums — so trend/seasonal/resid replay
-bit-for-bit on an external engine. Null values pass through with NULL
-trend contribution handling: a window containing any NULL value yields
-NULL trend for that row (the statsmodels behavior), and NULL detrended
-rows are excluded from the phase means."""
+bit-for-bit on an external engine. NaN values behave as NULL (the
+grid's guard). Null values pass through with NULL trend contribution
+handling: a window containing any NULL value yields NULL trend for that
+row (the statsmodels behavior), and NULL detrended rows are excluded
+from the phase means."""
 
 from __future__ import annotations
-
-import math
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from tempo_spark.functions.grid import grid6
-from tempo_spark.operators.indicators import _grid6_sql, _qn
-
-
-def _fmt_d(x: float) -> str:
-    """Shortest-round-trip SQL double literal (repr parses back to the
-    identical IEEE double; the ``D`` suffix pins DoubleType) — same
-    idiom as similarity/indicators (r12 plan-build discipline)."""
-    v = float(x)
-    if not math.isfinite(v):
-        raise ValueError(f"non-finite literal: {v!r}")
-    return repr(v) + "D"
-
-
-def _q6_sql(sql: str) -> str:
-    """``floor(x*1e6 + 0.5)/1e6`` over a SQL fragment — the RAW grid
-    quantize (no NaN guard; the guarded form is ``_grid6_sql``). Exactly
-    the Column tree ``F.floor(x * 1e6 + F.lit(0.5)) / F.lit(1e6)``."""
-    return f"floor(({sql}) * 1000000.0D + 0.5D) / 1000000.0D"
+from tempo_spark.functions.sql import (
+    double_lit,
+    grid6,
+    grid6_sql,
+    ident,
+    over_sql,
+)
 
 
 def seasonal_strength(
@@ -182,24 +169,22 @@ def seasonal_decompose(
     # the order expression is materialized once as `__sd_o` (the planner
     # projected it as `_w0` below the Window anyway) and pruned after the
     # window by Catalyst, then dropped from the output.
-    ov = (
-        "PARTITION BY " + ", ".join(_qn(k) for k in keys)
-        + " ORDER BY __sd_o ASC"
-    )
+    part = [ident(k) for k in keys]
+    ob = ["__sd_o ASC"]
     if getattr(tsdf, "sequence_col", None):
-        ov += ", " + _qn(tsdf.sequence_col) + " ASC"
+        ob.append(ident(tsdf.sequence_col) + " ASC")
     staged = df.select(
         "*",
         tsdf._exact_micros_order().alias("__sd_o"),
-        F.expr(
-            _q6_sql(f"cast({_qn(value_col)} as double)") + " AS __sd_y"
-        ),
+        F.expr(grid6_sql(ident(value_col)) + " AS __sd_y"),
     )
 
     half = period // 2
     ydec = "cast(__sd_y as decimal(18,6))"
-    wov = f"OVER ({ov})"
-    wfr = f"OVER ({ov} ROWS BETWEEN {half} PRECEDING AND {half} FOLLOWING)"
+    wov = over_sql(part, ob)
+    wfr = over_sql(
+        part, ob, f"ROWS BETWEEN {half} PRECEDING AND {half} FOLLOWING"
+    )
     if trend_method == "median":
         need = period if period % 2 == 1 else period + 1
         # median/percentile are not frame-capable window aggregates in
@@ -220,7 +205,7 @@ def seasonal_decompose(
             f"CASE WHEN (count(1) {wfr}) = {need}"
             f" AND (count(__sd_y) {wfr}) = {need}"
             f" THEN cast(sum({ydec}) {wfr} as double)"
-            f" / {_fmt_d(period)} END"
+            f" / {double_lit(period)} END"
         )
     else:
         # 2×p MA: full window [-p/2, p/2], endpoints at half weight —
@@ -233,7 +218,7 @@ def seasonal_decompose(
             f" AND (count(__sd_y) {wfr}) = {need}"
             f" THEN (cast(sum({ydec}) {wfr} - ({lo}) - ({hi}) as double)"
             f" + cast(({lo}) + ({hi}) as double) / 2.0D)"
-            f" / {_fmt_d(period)} END"
+            f" / {double_lit(period)} END"
         )
     staged = staged.selectExpr(
         "*",
@@ -251,7 +236,7 @@ def seasonal_decompose(
         # downstream op in range).
         det_raw = (
             "CASE WHEN (trend != 0)"
-            f" AND (abs(__sd_y / trend) < {_fmt_d(1e12)})"
+            f" AND (abs(__sd_y / trend) < {double_lit(1e12)})"
             " THEN __sd_y / trend END"
         )
     else:
@@ -259,7 +244,7 @@ def seasonal_decompose(
     staged = staged.selectExpr(
         "*",
         f"pmod(__sd_pos - 1, {period}) AS __sd_ph",
-        _q6_sql(det_raw) + " AS __sd_det",
+        grid6_sql(det_raw) + " AS __sd_det",
     )
 
     # r13: the phase-mean/centering/join-back tail parses as SQL
@@ -275,7 +260,7 @@ def seasonal_decompose(
     pm = pm.selectExpr(
         "*",
         "CASE WHEN __sd_dn > 0 THEN "
-        + _q6_sql("cast(__sd_ds as double) / __sd_dn")
+        + grid6_sql("cast(__sd_ds as double) / __sd_dn")
         + " END AS __sd_pm",
     )
     # guard the division: a series too short for ANY trend has zero
@@ -303,25 +288,25 @@ def seasonal_decompose(
     # name-based equi-joins would drop NULL-keyed series — they get a
     # trend (windows treat NULL as a partition) but no seasonal/resid.
     center_r = center.selectExpr(
-        *[f"{_qn(k)} AS __sd_k{i}" for i, k in enumerate(keys)], "__sd_c"
+        *[f"{ident(k)} AS __sd_k{i}" for i, k in enumerate(keys)], "__sd_c"
     )
     center_cond = F.expr(
-        " AND ".join(f"{_qn(k)} <=> __sd_k{i}" for i, k in enumerate(keys))
+        " AND ".join(f"{ident(k)} <=> __sd_k{i}" for i, k in enumerate(keys))
     )
     seasonal = (
         pm.join(F.broadcast(center_r), center_cond)
         .selectExpr(
-            *[_qn(k) for k in keys], "__sd_ph", seas_sql + " AS seasonal"
+            *[ident(k) for k in keys], "__sd_ph", seas_sql + " AS seasonal"
         )
     )
     seasonal_r = seasonal.selectExpr(
-        *[f"{_qn(k)} AS __sd_k{i}" for i, k in enumerate(keys)],
+        *[f"{ident(k)} AS __sd_k{i}" for i, k in enumerate(keys)],
         "__sd_ph AS __sd_phr",
         "seasonal",
     )
     seas_cond = F.expr(
         " AND ".join(
-            [f"{_qn(k)} <=> __sd_k{i}" for i, k in enumerate(keys)]
+            [f"{ident(k)} <=> __sd_k{i}" for i, k in enumerate(keys)]
             + ["__sd_ph = __sd_phr"]
         )
     )
@@ -384,11 +369,8 @@ def seasonal_anomalies(
     keys = list(tsdf.series_ids)
     # r12: one parsed projection instead of the Column chain — identical
     # expression tree (digest-pinned in tests/test_seasonal.py)
-    part = (
-        "PARTITION BY " + ", ".join(_qn(k) for k in keys) if keys else ""
-    )
-    wser = f"OVER ({part})"
-    staged = dec.selectExpr("*", _grid6_sql("resid") + " AS __sa_rq")
+    wser = over_sql([ident(k) for k in keys])
+    staged = dec.selectExpr("*", grid6_sql(ident("resid")) + " AS __sa_rq")
     rdec = "cast(__sa_rq as decimal(18,6))"
     cnt = f"count(__sa_rq) {wser}"
     s = f"cast(sum({rdec}) {wser} as double)"
@@ -404,10 +386,10 @@ def seasonal_anomalies(
     )
     flag = (
         f"CASE WHEN {ok}"
-        f" THEN abs(__sa_rq - ({mean})) > {_fmt_d(z)} * {sd} END"
+        f" THEN abs(__sa_rq - ({mean})) > {double_lit(z)} * {sd} END"
     )
     return staged.selectExpr(
         "*",
-        f"{zscore} AS {_qn(out_z)}",
-        f"{flag} AS {_qn(out_flag)}",
+        f"{zscore} AS {ident(out_z)}",
+        f"{flag} AS {ident(out_flag)}",
     ).drop("__sa_rq")

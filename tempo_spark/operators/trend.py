@@ -6,17 +6,19 @@ basic drift/trend diagnostic (and a one-step base forecast:
 statistics; no window, no collect.
 
 Determinism contract (the ACF idiom): t = µs offset from the series'
-first observation (exact long), y on the 1e-6 grid; sufficient sums
-accumulate as exact decimals sized so every product stays under the
-38-digit cap in BOTH Spark and DuckDB; the closed-form slope/intercept/r²
-are then FIXED IEEE expressions over those sums — replayable
-bit-for-bit. Degenerate groups (n < 2, zero time- or y-variance) yield
+first observation (exact long), y on the 1e-6 grid (NULL and NaN values
+are not observations); sufficient sums accumulate as exact decimals
+sized so every product stays under the 38-digit cap in BOTH Spark and
+DuckDB; the closed-form slope/intercept/r² are then FIXED IEEE
+expressions over those sums — replayable bit-for-bit. Degenerate groups (n < 2, zero time- or y-variance) yield
 NULL slope/r² (and NULL intercept when the slope is NULL)."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from tempo_spark.functions.sql import grid6_sql, ident
 
 
 def fit_trend(tsdf, value_col: str) -> DataFrame:
@@ -42,7 +44,7 @@ def fit_trend(tsdf, value_col: str) -> DataFrame:
 
     wall = Window.partitionBy(*[F.col(c) for c in keys])
     cur = tsdf._exact_micros_order()
-    yq = F.floor(F.col(value_col).cast("double") * 1e6 + F.lit(0.5)) / F.lit(1e6)
+    yq = F.expr(grid6_sql(ident(value_col)))
     staged = df.select(
         *keys,
         (cur - F.min(cur).over(wall)).alias("__tr_t"),

@@ -21,12 +21,7 @@ from typing import Optional
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-
-def _hardened_round6(c: Column) -> Column:
-    """floor(x*1e6+0.5)/1e6 — half-up for the non-negative similarity scores
-    emitted here, and a fixed IEEE op sequence every engine reproduces
-    bit-identically (``round()`` half-way behavior differs across engines)."""
-    return F.floor(c * 1_000_000 + F.lit(0.5)) / 1_000_000
+from tempo_spark.functions.sql import grid6, grid6_sql, ident
 
 
 def md5_32(c: Column) -> Column:
@@ -353,7 +348,7 @@ def ngram_contamination(
         id_col,
         "contam_ngrams",
         "n_ngrams",
-        _hardened_round6(frac).alias("contam_frac"),
+        grid6(frac).alias("contam_frac"),
     )
 
 
@@ -431,7 +426,7 @@ def with_hashed_shingles(
     # discipline; the Column/HOF form cost ~0.3 s of driver py4j per
     # call and this builder runs 2-3× per dedup pipeline) — same tree,
     # bit-identical signatures (minhash oracle entries re-verified)
-    tq = "`" + text_col.replace("`", "``") + "`"
+    tq = ident(text_col)
     shingle_at = "xxhash64(" + ", ".join(
         f"element_at({th_c}, i + {j})" for j in range(1, k + 1)
     ) + ")"
@@ -444,7 +439,7 @@ def with_hashed_shingles(
     return (
         df.selectExpr("*", f"split(trim({tq}), '\\\\s+') AS {toks_c}")
         .selectExpr("*", f"transform({toks_c}, t -> xxhash64(t)) AS {th_c}")
-        .selectExpr("*", "array_distinct(" + hashes + ") AS `" + out.replace("`", "``") + "`")
+        .selectExpr("*", f"array_distinct({hashes}) AS {ident(out)}")
         .drop(toks_c, th_c)
     )
 
@@ -469,7 +464,7 @@ def _signature_from_hashes(
     transform-over-sequence(0,k-1) would also build fast but executes ~4×
     SLOWER: the variable seed defeats per-seed constant folding."""
     if isinstance(hashed, str):
-        col_sql = f"`{hashed}`"
+        col_sql = ident(hashed)
         if hash_family == "md5_32":
             items = [
                 f"array_min(transform({col_sql}, h -> "
@@ -531,42 +526,31 @@ def with_minhash(
 
 
 def band_key_array(
-    sig: Column | str, bands: int, hash_family: str = "xxhash64"
+    sig: str, bands: int, hash_family: str = "xxhash64"
 ) -> Column:
-    """Array of per-band bucket keys for a MinHash signature: band b's key
-    is the hash (or, for md5_32, the raw comma-join — equality-equivalent
-    and replayable) of the signature slice belonging to that band.
+    """Array of per-band bucket keys for the MinHash signature column
+    named ``sig``: band b's key is the hash (or, for md5_32, the raw
+    comma-join — equality-equivalent and replayable) of the signature
+    slice belonging to that band.
 
-    Pass a column NAME for the parsed-SQL fast path (r13): the ``bands``
-    keys render as ONE ``F.expr`` parse with the band index UNROLLED into
-    an ``array(key_0, …)`` — bands is a small static constant, and the
-    transform-over-sequence form both costs ~150 driver py4j trips to
-    build and runs the slice arithmetic through the interpreted HOF
-    evaluator per row (the repo-wide unroll rule). Values are identical
-    per family (pytest-pinned against the Column form)."""
-    if isinstance(sig, str):
-        q = "`" + sig.replace("`", "``") + "`"
-        rpb = f"(size({q}) / {bands})"
-        items = []
-        for b in range(bands):
-            joined = (
-                f"concat_ws(',', slice({q}, "
-                f"cast(({b} * {rpb}) as int) + 1, cast({rpb} as int)))"
-            )
-            items.append(
-                joined if hash_family == "md5_32" else f"xxhash64({joined})"
-            )
-        return F.expr("array(" + ", ".join(items) + ")")
-    rows_per_band = F.size(sig) / bands  # driver knows num_hashes divides bands
-
-    def band_key(b):
-        joined = F.concat_ws(
-            ",",
-            F.slice(sig, (b * rows_per_band).cast("int") + 1, rows_per_band.cast("int")),
+    The ``bands`` keys render as ONE ``F.expr`` parse with the band index
+    UNROLLED into an ``array(key_0, …)`` — bands is a small static
+    constant, and a transform-over-sequence form would both cost ~150
+    driver py4j trips to build and run the slice arithmetic through the
+    interpreted HOF evaluator per row (the repo-wide unroll rule). Keys
+    are pinned per family by goldens in tests/test_pipeline.py."""
+    q = ident(sig)
+    rpb = f"(size({q}) / {bands})"
+    items = []
+    for b in range(bands):
+        joined = (
+            f"concat_ws(',', slice({q}, "
+            f"cast(({b} * {rpb}) as int) + 1, cast({rpb} as int)))"
         )
-        return joined if hash_family == "md5_32" else F.xxhash64(joined)
-
-    return F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), band_key)
+        items.append(
+            joined if hash_family == "md5_32" else f"xxhash64({joined})"
+        )
+    return F.expr("array(" + ", ".join(items) + ")")
 
 
 def _bucket_capped_self_join(
@@ -752,7 +736,7 @@ def jaccard_verify(
             / F.size(F.array_union("__sh_a", "__sh_b")),
         )
         .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", _hardened_round6(F.col("jaccard")).alias("jaccard"))
+        .select("id_a", "id_b", grid6("jaccard").alias("jaccard"))
     )
     return out
 
@@ -811,7 +795,7 @@ def minhash_dedup(
     # chain (explode/min_by/max_by/size-ratio/floor-round), batched into a
     # handful of parses — the Column form cost ~190 driver py4j trips per
     # build and this verify tail rides in four bench rows
-    idq = "`" + id_col.replace("`", "``") + "`"
+    idq = ident(id_col)
     melted = cands.selectExpr(
         "id_a", "id_b", f"explode(array(id_a, id_b)) AS {idq}"
     )
@@ -836,7 +820,7 @@ def minhash_dedup(
         .where(F.col("jaccard") >= threshold)
         .selectExpr(
             "id_a", "id_b",
-            "(floor(jaccard * 1000000 + 0.5) / 1000000) AS jaccard",
+            f"{grid6_sql('jaccard')} AS jaccard",
         )
     )
     return out
@@ -934,7 +918,7 @@ def near_dedup_against_corpus(
         .select(
             F.col("__new_id").alias(id_col),
             "corpus_id",
-            _hardened_round6(F.col("jaccard")).alias("jaccard"),
+            grid6("jaccard").alias("jaccard"),
         )
     )
     return _apply_dedup_mode(new_df, pairs, id_col, mode)
@@ -1582,6 +1566,6 @@ def ngram_jaccard_pairs(
             "jaccard", F.col("__co") / (F.col("__na") + F.col("__nb") - F.col("__co"))
         )
         .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", _hardened_round6(F.col("jaccard")).alias("jaccard"))
+        .select("id_a", "id_b", grid6("jaccard").alias("jaccard"))
     )
     return out

@@ -33,9 +33,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from tempo_spark.functions.sql import ident
 from tempo_spark.pipeline.dedup import md5_32
 from tempo_spark.pipeline.sampling import _key_hash
-from tempo_spark.pipeline.text import _qn, _tokens_sql, tokens_col
+from tempo_spark.pipeline.text import _tokens_sql, tokens_col
 
 
 def _gram_hash(gram: Column, hash_family: str) -> Column:
@@ -81,9 +82,9 @@ def _gram_rows(
     # r12 one-parse plan build: each fragment parses once and builds the
     # SAME tree as the former Column chain (values pinned by the dsir
     # suite + the quality_score dsir gate tag)
-    kq = [_qn(c) for c in keep_cols]
+    kq = [ident(c) for c in keep_cols]
     staged = df.selectExpr(
-        *kq, f"{_tokens_sql(f'lower({_qn(text_col)})')} AS __dsir_t"
+        *kq, f"{_tokens_sql(f'lower({ident(text_col)})')} AS __dsir_t"
     )
     n_uni = "size(__dsir_t)" if 1 in ngrams else "0"
     n_bi = (
@@ -134,7 +135,7 @@ def _gram_bucket_rows(
     if buckets <= 0:
         raise ValueError("buckets must be positive")
     return _gram_rows(df, text_col, ngrams, keep_cols).selectExpr(
-        *[_qn(c) for c in keep_cols],
+        *[ident(c) for c in keep_cols],
         f"pmod({_gram_hash_sql('__dsir_g', hash_family)}, {int(buckets)})"
         " AS __b",
     )
@@ -266,7 +267,7 @@ def with_importance_weight(
         _gram_rows(df, text_col, tuple(ngrams), [id_col])
         .crossJoin(F.broadcast(meta))
         .selectExpr(
-            _qn(id_col),
+            ident(id_col),
             f"pmod({_gram_hash_sql('__dsir_g', hash_family)}, __m) AS __b",
             "__lr0d",
         )
@@ -278,9 +279,9 @@ def with_importance_weight(
         )
         .groupBy(id_col)
         .agg(F.expr(
-            f"{agg_sql}(coalesce(__lr, __lr0d)) AS {_qn(out)}"
+            f"{agg_sql}(coalesce(__lr, __lr0d)) AS {ident(out)}"
         ))
-        .selectExpr(f"{_qn(id_col)} AS __dsir_id", _qn(out))
+        .selectExpr(f"{ident(id_col)} AS __dsir_id", ident(out))
     )
     return df.join(
         per_doc, F.col(id_col).eqNullSafe(F.col("__dsir_id")), "left"
@@ -322,7 +323,7 @@ def sample_by_importance(
         "*", h.alias("__dsir_h")
     )
     key_sql = (
-        f"cast({_qn(weight_col)} as double) / {float(temperature)!r}D"
+        f"cast({ident(weight_col)} as double) / {float(temperature)!r}D"
         f" + -ln(-ln((pmod(__dsir_h, {m}) + 0.5D) / {float(m)!r}D))"
     )
     out = (

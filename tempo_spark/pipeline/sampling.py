@@ -27,6 +27,7 @@ from typing import Mapping, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from tempo_spark.functions.sql import ident, str_lit
 from tempo_spark.pipeline.dedup import md5_32
 
 #: modulus for split bucketing: weights resolve to integer bucket ranges so
@@ -41,7 +42,7 @@ def _group_lit_sql(k) -> str:
     if isinstance(k, bool):
         return "TRUE" if k else "FALSE"
     if isinstance(k, str):
-        return "'" + k.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return str_lit(k)
     if isinstance(k, int):
         return str(k) + ("L" if not (-(2**31) <= k < 2**31) else "")
     if isinstance(k, float):
@@ -153,7 +154,7 @@ def assign_packs(
     # double quotient silently loses exactness (same rule as the bloom
     # word index); both operands are longs and non-negative here
     return df.withColumn(out, start).withColumn(
-        out, F.expr(f"`{out}` div {int(max_tokens)}")
+        out, F.expr(f"{ident(out)} div {int(max_tokens)}")
     )
 
 
@@ -205,9 +206,7 @@ def mix_rates(
             )
             share = F.when(cond, F.lit(float(v) / total)).otherwise(share)
 
-    from tempo_spark.pipeline.text import _qn
-
-    amount = f"cast({_qn(token_col)} as double)" if token_col else "1.0D"
+    amount = f"cast({ident(token_col)} as double)" if token_col else "1.0D"
     sizes = (
         df.groupBy(F.col(group_col).alias("__mix_g"))
         .agg(F.expr(f"sum({amount}) AS __avail"))
@@ -224,7 +223,7 @@ def mix_rates(
     # cross join is not CSE'd with the sizes subtree and would re-scan the
     # corpus a third time
     return sizes.selectExpr(
-        f"__mix_g AS {_qn(group_col)}",
+        f"__mix_g AS {ident(group_col)}",
         "least(1.0D, __share * min(__avail / __share) OVER () / __avail)"
         " AS mix_rate",
     )
@@ -249,10 +248,8 @@ def temperature_rates(
     ``mix_by_group(rates_df=...)`` for append-stable membership."""
     if not (temperature > 0):
         raise ValueError(f"temperature must be > 0, got {temperature}")
-    from tempo_spark.pipeline.text import _qn
-
     # r12 one-parse plan build (the mix_rates idiom)
-    amount = f"cast({_qn(token_col)} as double)" if token_col else "1.0D"
+    amount = f"cast({ident(token_col)} as double)" if token_col else "1.0D"
     sized = (
         df.groupBy(F.col(group_col).alias("__mix_g"))
         .agg(F.expr(f"sum({amount}) AS __avail"))
@@ -263,7 +260,7 @@ def temperature_rates(
         .selectExpr("*", "__pw / sum(__pw) OVER () AS __share")
     )
     return sized.selectExpr(
-        f"__mix_g AS {_qn(group_col)}",
+        f"__mix_g AS {ident(group_col)}",
         "least(1.0D, __share * min(__avail / __share) OVER () / __avail)"
         " AS mix_rate",
     )

@@ -36,6 +36,7 @@ from typing import Optional
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from tempo_spark.functions.sql import grid6_key, ident
 from tempo_spark.pipeline.text import tokens_col
 
 
@@ -218,7 +219,7 @@ def _bm25_rank(
             .where(F.col("matched") == F.col("__need"))
             .drop("__need", "__nqid")
         )
-    score_q = F.floor(F.col("score") * 1_000_000 + F.lit(0.5))
+    score_q = grid6_key("score")
     w = Window.partitionBy("__qid").orderBy(
         score_q.desc(),
         F.col("matched").desc(),
@@ -655,7 +656,7 @@ def retrieval_metrics(
             ).isNull(),
             F.expr(
                 f"cast(shiftleft(cast(1 as bigint), "
-                f"cast(`{rel_col}` as int)) - 1 as bigint)"
+                f"cast({ident(rel_col)} as int)) - 1 as bigint)"
             ),
         )
     )

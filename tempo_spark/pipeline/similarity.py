@@ -23,6 +23,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from tempo_spark.functions.sql import double_lit, grid6, ident
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -207,29 +209,21 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[flo
     return planes
 
 
-def hyperplane_bucket(vec: Column | str, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id: bit i set iff vec·plane_i > 0. Evaluated as a
-    native expression over literal plane arrays.
-
-    ``vec`` as a SQL fragment string builds the whole n_planes×dim literal
-    tree in ONE parsed expression (one py4j round trip instead of one per
-    element — the plan-build-latency discipline; same tree either way,
-    equality pinned in tests/test_similarity_sqlbuild.py)."""
-    if isinstance(vec, str):
-        terms = ["cast(0 as bigint)"]
-        for i, p in enumerate(planes):
-            bit = (
-                f"(case when {_dot_sql(vec, [float(x) for x in p])} > 0 "
-                f"then cast(1 as bigint) else cast(0 as bigint) end)"
-            )
-            terms.append(f"shiftleft({bit}, {i})")
-        return F.expr(" + ".join(terms))
-    bucket = F.lit(0).cast("long")
+def hyperplane_bucket(vec: str, planes: list[list[float]]) -> Column:
+    """Sign-bit bucket id of the vector SQL fragment ``vec`` (a column
+    name or expression): bit i set iff vec·plane_i > 0. Evaluated as a
+    native expression over literal plane arrays, the whole
+    n_planes×dim literal tree built in ONE parsed expression (one py4j
+    round trip instead of one per element — the plan-build-latency
+    discipline)."""
+    terms = ["cast(0 as bigint)"]
     for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        bit = F.when(dot(vec, plane) > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        bucket = bucket + F.shiftleft(bit, i)
-    return bucket
+        bit = (
+            f"(case when {_dot_sql(vec, [float(x) for x in p])} > 0 "
+            f"then cast(1 as bigint) else cast(0 as bigint) end)"
+        )
+        terms.append(f"shiftleft({bit}, {i})")
+    return F.expr(" + ".join(terms))
 
 
 def lsh_topk(
@@ -278,22 +272,6 @@ def lsh_topk(
     )
 
 
-def _q(name: str) -> str:
-    """Backtick-quote a column name for embedding in a SQL fragment."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _fmt_d(x: float) -> str:
-    """Shortest-round-trip SQL double literal. ``repr(float)`` is the
-    shortest decimal that parses back to the identical double, and the
-    SQL parser's ``D`` suffix makes it a DoubleType literal — so the
-    parsed expression carries the exact same IEEE value as ``F.lit``."""
-    v = float(x)
-    if not math.isfinite(v):
-        raise ValueError(f"non-finite literal in centroid/plane: {v!r}")
-    return repr(v) + "D"
-
-
 def _dot_sql(vec_sql: str, center: list[float]) -> str:
     """SQL text of :func:`dot` against a literal array — the identical
     ``aggregate(zip_with(...))`` fold, parsed in ONE py4j round trip
@@ -301,7 +279,7 @@ def _dot_sql(vec_sql: str, center: list[float]) -> str:
     (guide §7.3; the repo's parsed-SQL discipline): the per-element
     ``F.lit`` form costs dim+1 driver round trips PER CENTROID, measured
     as multi-second build time for k×dim near ASSIGN_LITERAL_MAX."""
-    arr = ",".join(_fmt_d(x) for x in center)
+    arr = ",".join(double_lit(x) for x in center)
     return (
         f"aggregate(zip_with({vec_sql}, array({arr}), (x, y) -> x * y), "
         f"0.0D, (acc, x) -> acc + x)"
@@ -309,56 +287,29 @@ def _dot_sql(vec_sql: str, center: list[float]) -> str:
 
 
 def _center_term_sql(vec_sql: str, center: list[float]) -> str:
-    """SQL text of :func:`_center_score_term` — same tree, one parse."""
-    cn = _fmt_d(sum(x * x for x in center))
-    return f"-2.0D * {_dot_sql(vec_sql, center)} + {cn}"
-
-
-def _center_score_term(vec: Column | str, center: list[float]) -> Column:
-    """THE literal-path distance surrogate to one centroid:
+    """THE literal-path distance surrogate to one centroid, as SQL text:
     ``−2·v·c + ‖c‖²`` (= ‖v−c‖² − ‖v‖²; the ‖v‖² term is rank-invariant).
     ``‖c‖²`` is folded left-to-right driver-side — the same IEEE op order
     as a SQL ``list_reduce`` — so an external engine replays it
     bit-exactly. Single definition shared by the IVF cell scores and the
-    PQ LUT so the cross-engine fold order cannot drift between them.
-
-    ``vec`` may be a Column or a SQL fragment string; the string form
-    parses the whole term in one py4j call (plan-build latency — see
-    :func:`_dot_sql`). Both build the same expression tree."""
-    if isinstance(vec, str):
-        return F.expr(_center_term_sql(vec, center))
-    return F.lit(-2.0) * dot(vec, F.array(*[F.lit(x) for x in center])) + F.lit(
-        sum(x * x for x in center)
-    )
+    PQ LUT so the cross-engine fold order cannot drift between them."""
+    cn = double_lit(sum(x * x for x in center))
+    return f"-2.0D * {_dot_sql(vec_sql, center)} + {cn}"
 
 
-def _cell_scores(vec: Column | str, centers: list[list[float]]) -> Column:
+def _cell_scores(vec_sql: str, centers: list[list[float]]) -> Column:
     """array<struct<d,cell>> of squared-distance surrogates to each centroid,
     as a native expression over literal centroid arrays (no shuffle, no UDF)
-    — the ``d`` term is :func:`_center_score_term`.
-
-    With ``vec`` given as a SQL fragment string, the whole k×dim literal
+    — the ``d`` term is :func:`_center_term_sql`. The whole k×dim literal
     tree is built as ONE parsed expression (one py4j round trip instead of
     ~k·dim — measured 16×64 ≈ 2,100 round trips ≈ 1-2 s of driver time per
-    plan build on the bench). The parsed tree is node-for-node the same:
-    ``named_struct('d', <term>, 'cell', i)`` == ``F.struct(term.alias('d'),
-    F.lit(i).alias('cell'))``; equality is pinned by
+    plan build on the bench); scores are pinned bit-exact by goldens in
     ``tests/test_similarity_sqlbuild.py``."""
-    if isinstance(vec, str):
-        entries = ",".join(
-            f"named_struct('d', {_center_term_sql(vec, c)}, 'cell', {i})"
-            for i, c in enumerate(centers)
-        )
-        return F.expr(f"array({entries})")
-    return F.array(
-        *[
-            F.struct(
-                _center_score_term(vec, c).alias("d"),
-                F.lit(i).alias("cell"),
-            )
-            for i, c in enumerate(centers)
-        ]
+    entries = ",".join(
+        f"named_struct('d', {_center_term_sql(vec_sql, c)}, 'cell', {i})"
+        for i, c in enumerate(centers)
     )
+    return F.expr(f"array({entries})")
 
 
 # above this many TOTAL LITERALS (n_centroids × dim — the actual size of
@@ -830,11 +781,10 @@ class IVFIndex:
         centers = [list(r.center) for r in sorted(rows, key=lambda r: r.cell)]
         return IVFIndex(assigned, centers, id_col, vec_col)
 
-    def _probe_cells(self, vec: Column | str, nprobe: int) -> Column:
+    def _probe_cells(self, vec_sql: str, nprobe: int) -> Column:
         """ids of the nprobe nearest centroids, as a native expression over
-        literal centroid arrays (no shuffle, no UDF). ``vec`` as a SQL
-        fragment builds the literal tree in one parse (see _cell_scores)."""
-        scored = _cell_scores(vec, self.centers)
+        literal centroid arrays (no shuffle, no UDF; see _cell_scores)."""
+        scored = _cell_scores(vec_sql, self.centers)
         return F.slice(F.array_sort(scored), 1, nprobe).getField("cell")
 
     def _with_probe_cells(
@@ -846,7 +796,7 @@ class IVFIndex:
         :func:`_assign_cells`)."""
         if _literal_path_ok(self.centers):
             return frame.withColumn(
-                "cell", F.explode(self._probe_cells(_q(vec_col_name), nprobe))
+                "cell", F.explode(self._probe_cells(ident(vec_col_name), nprobe))
             )
         joined = frame.crossJoin(
             F.broadcast(_centers_frame(frame.sparkSession, self.centers))
@@ -885,11 +835,6 @@ class IVFIndex:
             .where(F.col("__rank") <= k)
             .withColumnRenamed("__rank", "rank")
         )
-
-
-def _hardened_round6(c: Column) -> Column:
-    # fixed IEEE op sequence both Spark and DuckDB reproduce bit-identically
-    return F.floor(c * 1_000_000 + F.lit(0.5)) / 1_000_000
 
 
 def embedding_near_dups(
@@ -932,7 +877,7 @@ def embedding_near_dups(
             .select(
                 F.col(f"a.{id_col}").alias("id_a"),
                 F.col(f"b.{id_col}").alias("id_b"),
-                _hardened_round6(raw).alias("cosine"),
+                grid6(raw).alias("cosine"),
             )
         )
     if dim is None:
@@ -1031,7 +976,7 @@ def embedding_dedup_against_corpus(
         .select(
             F.col("__new_id").alias(id_col),
             "corpus_id",
-            _hardened_round6(F.col("__raw")).alias("cosine"),
+            grid6("__raw").alias("cosine"),
         )
     )
     from tempo_spark.pipeline.dedup import _apply_dedup_mode
@@ -1086,7 +1031,7 @@ def semantic_dedup_pairs(
             .select(
                 F.col(f"a.{id_col}").alias("id_a"),
                 F.col(f"b.{id_col}").alias("id_b"),
-                _hardened_round6(F.col("__raw")).alias("cosine"),
+                grid6("__raw").alias("cosine"),
             )
         )
 
@@ -1529,7 +1474,7 @@ class PQCodec:
         valid = self._vec_ok(vec)
         if self._literal_ops() <= ASSIGN_LITERAL_MAX and self.rotation is None:
             codes = []
-            vec_sql = f"cast({_q(src)} as array<double>)"
+            vec_sql = f"cast({ident(src)} as array<double>)"
             for j, book in enumerate(self.codebooks):
                 sub = f"slice({vec_sql}, {j * self.dsub + 1}, {self.dsub})"
                 codes.append(
@@ -1610,7 +1555,7 @@ class PQCodec:
             book_arr = F.expr(
                 "array("
                 + ",".join(
-                    "array(" + ",".join(_fmt_d(x) for x in c) + ")"
+                    "array(" + ",".join(double_lit(x) for x in c) + ")"
                     for c in book
                 )
                 + ")"
@@ -1626,7 +1571,7 @@ class PQCodec:
 
     def _lut_expr(self, qvec_sql: str) -> Column:
         """Flat array<double> of length m·ksub: LUT[j·ksub + i] =
-        ‖c_ji‖² − 2·q_j·c_ji (the shared :func:`_center_score_term`),
+        ‖c_ji‖² − 2·q_j·c_ji (the shared :func:`_center_term_sql`),
         literal-expression path — built as ONE parsed expression (the
         m·ksub·dsub literal tree would otherwise cost one py4j round trip
         per element; the plan-build-latency discipline)."""
@@ -1695,7 +1640,7 @@ class PQCodec:
                 out,
                 F.when(
                     self._vec_ok(vec),
-                    self._lut_expr(f"cast({_q(query_vec)} as array<double>)"),
+                    self._lut_expr(f"cast({ident(query_vec)} as array<double>)"),
                 ),
             )
         return queries.withColumn(out, self._arrow_lut_udf()(vec))

@@ -16,6 +16,14 @@ from typing import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from tempo_spark.functions.sql import (
+    grid6,
+    grid6_key,
+    grid6_sql,
+    ident,
+    str_lit,
+)
+
 # small, fixed stopword lists per language — deterministic and cheap to
 # broadcast as literals inside the plan
 STOPWORDS: dict[str, list[str]] = {
@@ -32,11 +40,6 @@ def tokens_col(text: Column) -> Column:
     return F.when(trimmed == "", F.array().cast("array<string>")).otherwise(
         F.split(trimmed, r"\s+")
     )
-
-
-def _qn(name: str) -> str:
-    """Backtick-quote a column name for embedding in a SQL fragment."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _tokens_sql(text_sql: str) -> str:
@@ -79,7 +82,7 @@ def with_quality_score(df: DataFrame, text_col: str = "text", out: str = "qualit
     ~0.4 s of driver py4j per plan build; the parsed tree is the same
     expressions (bit-identical outputs pinned against the Column form in
     tests/test_pipeline.py::test_quality_score_sql_parity)."""
-    t = _qn(text_col)
+    t = ident(text_col)
     toks = _tokens_sql(t)
     n_toks = f"size({toks})"
     n_chars = f"length({t})"
@@ -87,14 +90,10 @@ def with_quality_score(df: DataFrame, text_col: str = "text", out: str = "qualit
     punct_ratio = (
         f"(CASE WHEN {n_chars} > 0 THEN {punct} / {n_chars} ELSE 0.0D END)"
     )
-    # escape each word like every other name-carrying literal in this
-    # repo (acf._sql_str): today's list is plain ASCII, but a future
-    # stopword containing a quote/backslash must not break the parse or
-    # silently change the expression
-    sw = "array(" + ",".join(
-        "'" + w.replace("\\", "\\\\").replace("'", "\\'") + "'"
-        for w in STOPWORDS["en"]
-    ) + ")"
+    # escaped like every name-carrying literal: today's list is plain
+    # ASCII, but a future stopword containing a quote/backslash must not
+    # break the parse or silently change the expression
+    sw = "array(" + ",".join(str_lit(w) for w in STOPWORDS["en"]) + ")"
     sw_hits = f"size(filter({toks}, t -> array_contains({sw}, lower(t))))"
     sw_ratio = (
         f"(CASE WHEN {n_toks} > 0 THEN {sw_hits} / {n_toks} ELSE 0.0D END)"
@@ -113,7 +112,7 @@ def with_quality_score(df: DataFrame, text_col: str = "text", out: str = "qualit
         f"(({length_score} + {punct_score} + {sw_score} + {wordlen_score})"
         f" / 4)"
     )
-    return df.selectExpr("*", f"round({score}, 6) AS {_qn(out)}")
+    return df.selectExpr("*", f"round({score}, 6) AS {ident(out)}")
 
 
 def _lang_pred_expr(toks: Column) -> Column:
@@ -226,10 +225,7 @@ def with_paragraph_langs(
     n_foreign = F.size(
         F.filter(pl, lambda l: (l != F.lit("und")) & (l != pm))
     )
-    frac = F.when(
-        n_known > 0,
-        F.floor(n_foreign / n_known * 1_000_000 + F.lit(0.5)) / 1_000_000,
-    )
+    frac = F.when(n_known > 0, grid6(n_foreign / n_known))
     return (
         staged.withColumn(out_langs, pl)
         .withColumn(out_majority, pm)
@@ -332,7 +328,7 @@ def with_repetition_metrics(
     # discipline — the Column chain cost ~0.4 s of driver py4j per call;
     # bit-identical outputs pinned in tests/test_pipeline.py).
     # guard: sequence(1, 0) yields a DESCENDING [1, 0], not an empty array
-    stepped = df.selectExpr("*", f"{_tokens_sql(_qn(text_col))} AS {toks_c}")
+    stepped = df.selectExpr("*", f"{_tokens_sql(ident(text_col))} AS {toks_c}")
     grams = (
         f"(CASE WHEN size({toks_c}) >= {n} THEN "
         f"transform(sequence(1, size({toks_c}) - {n - 1}), "
@@ -346,12 +342,12 @@ def with_repetition_metrics(
         f"(CASE WHEN {total} > 0 THEN 1.0D - {distinct} / {total} "
         f"ELSE 0.0D END)"
     )
-    hardened = f"floor({frac} * 1000000 + 0.5D) / 1000000"
+    hardened = grid6_sql(frac)
     return stepped.selectExpr(
         "*",
-        f"{total} AS {_qn(out_total)}",
-        f"{distinct} AS {_qn(out_distinct)}",
-        f"{hardened} AS {_qn(out_frac)}",
+        f"{total} AS {ident(out_total)}",
+        f"{distinct} AS {ident(out_distinct)}",
+        f"{hardened} AS {ident(out_frac)}",
     ).drop(toks_c, grams_c)
 
 
@@ -431,12 +427,11 @@ def with_ngram_char_fracs(
     )
     # the ONE hardened-rounding recipe (cross-engine-critical) — never a
     # local copy
-    from tempo_spark.pipeline.dedup import _hardened_round6 as hr6
 
     fracs = per_doc.select(
         F.col(id_col).alias("__cf_id"),
-        hr6(F.col("__top.w") / F.col("__chars")).alias(f"top_{n}gram_char_frac"),
-        hr6(F.col("__dup") / F.col("__chars")).alias(f"dup_{n}gram_char_frac"),
+        grid6(F.col("__top.w") / F.col("__chars")).alias(f"top_{n}gram_char_frac"),
+        grid6(F.col("__dup") / F.col("__chars")).alias(f"dup_{n}gram_char_frac"),
     )
     if broadcast_back:
         fracs = F.broadcast(fracs)
@@ -481,10 +476,9 @@ def with_char_entropy(
     per_doc = counts.groupBy(id_col).agg(
         F.sum(-p * F.log2(p)).alias("__h")
     )
-    from tempo_spark.pipeline.dedup import _hardened_round6 as hr6
 
     ent = per_doc.select(
-        F.col(id_col).alias("__ce_id"), hr6(F.col("__h")).alias(out)
+        F.col(id_col).alias("__ce_id"), grid6(F.col("__h")).alias(out)
     )
     if broadcast_back:
         ent = F.broadcast(ent)
@@ -539,7 +533,6 @@ def with_gopher_flags(
     # CSE'd, so inlining `toks`/`lines` into every numerator, denominator
     # and guard would re-split each document ~6× per row (the
     # with_minhash / with_repetition_metrics gotcha)
-    from tempo_spark.pipeline.dedup import _hardened_round6 as hr6
 
     for reserved in ("__gf_toks", "__gf_lines"):
         if reserved in df.columns:
@@ -560,7 +553,7 @@ def with_gopher_flags(
     )
 
     def safe(num: Column, den: Column) -> Column:
-        return F.when(den > 0, hr6(num / den)).otherwise(F.lit(0.0))
+        return F.when(den > 0, grid6(num / den)).otherwise(F.lit(0.0))
 
     return (
         staged.withColumn("alpha_word_frac", safe(alpha, n_words))
@@ -716,7 +709,7 @@ def tfidf_keywords(
     )
     # quantized primary key + discrete tiebreak — see the ranking note in
     # the docstring (ln() ulp divergence between engines)
-    score_q = F.floor(F.col("tfidf") * 1_000_000 + F.lit(0.5))
+    score_q = grid6_key("tfidf")
     w = Window.partitionBy(id_col).orderBy(
         score_q.desc(),
         F.col("tf").desc(),
@@ -1117,7 +1110,7 @@ def top_collocations(
             ),
         )
     )
-    score_q = F.floor(F.col("pmi") * 1_000_000 + F.lit(0.5))
+    score_q = grid6_key("pmi")
     ranked = scored.orderBy(
         score_q.desc(),
         F.col("pair_count").desc(),

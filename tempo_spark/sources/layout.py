@@ -22,6 +22,8 @@ from typing import Mapping, Sequence, Tuple
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from tempo_spark.functions.sql import ident
+
 
 def _quantize(col: Column, lo: float, hi: float, bits: int) -> Column:
     """Clamp to [lo, hi] and quantize to an integer in [0, 2^bits - 1].
@@ -99,7 +101,7 @@ def with_morton_code(
     for qn, (c, (lo, hi)) in zip(qnames, items):
         staged = staged.withColumn(qn, _quantize(F.col(c), lo, hi, bits))
     terms = [
-        f"shiftleft(shiftright(`{qn}`, {j}) & 1, {j * n + (n - 1 - i)})"
+        f"shiftleft(shiftright({ident(qn)}, {j}) & 1, {j * n + (n - 1 - i)})"
         for i, qn in enumerate(qnames)
         for j in range(bits)
     ]

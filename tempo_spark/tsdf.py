@@ -38,6 +38,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from tempo_spark.functions.sql import RUNNING, ident, over_sql
 from tempo_spark.functions.timestamps import ts_double_from, ts_to_double
 
 TsLiteral = Union[str, int, float]
@@ -1058,9 +1059,6 @@ class TSDF:
             )
         half = B // 2
 
-        def _bq(name: str) -> str:
-            return "`" + name.replace("`", "``") + "`"
-
         # the block/offset columns come from row_number over one sort and
         # the prefix sums from OTHER (series, block)-partitioned sorts —
         # duplicate timestamps ordered differently across them would
@@ -1081,17 +1079,13 @@ class TSDF:
             "__emp_tb",
             F.xxhash64(F.struct(*[F.col(c) for c in self.df.columns])),
         )
-        order_sql = [f"{_bq(self.ts_col)} ASC"]
+        order_sql = [f"{ident(self.ts_col)} ASC"]
         if self.sequence_col:
-            order_sql.append(f"{_bq(self.sequence_col)} ASC")
+            order_sql.append(f"{ident(self.sequence_col)} ASC")
         order_sql.append("__emp_tb ASC")
-        part = ", ".join(_bq(c) for c in self.series_ids)
-        ovw = (
-            ("PARTITION BY " + part + " " if part else "")
-            + "ORDER BY " + ", ".join(order_sql)
-        )
-        rows_all = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
-        yd = f"cast({_bq(colName)} as double)"
+        part = [ident(c) for c in self.series_ids]
+        ovw = over_sql(part, order_sql)
+        yd = f"cast({ident(colName)} as double)"
         # NaN handling (the r6/r11 class): a NaN would ride the prefix
         # sums and poison every later row in the phase BLOCK; the sliding
         # form NaNs exactly the frames containing it. Match that: exclude
@@ -1100,7 +1094,7 @@ class TSDF:
         # constant-lag trick)
         staged = staged.selectExpr(
             "*",
-            f"(row_number() OVER ({ovw})) - 1 AS __emp_t0",
+            f"(row_number() {ovw}) - 1 AS __emp_t0",
             f"(CASE WHEN isnan({yd}) THEN 1 ELSE 0 END) AS __emp_nan",
         )
         phase_cols = []
@@ -1111,7 +1105,8 @@ class TSDF:
             ]
         staged = staged.selectExpr(
             "*",
-            f"sum(__emp_nan) OVER ({ovw} {rows_all}) AS __emp_nc",
+            f"sum(__emp_nan) {over_sql(part, order_sql, RUNNING)}"
+            " AS __emp_nc",
             *phase_cols,
         )
         z_cols = [
@@ -1121,11 +1116,9 @@ class TSDF:
         ]
         staged = staged.selectExpr("*", *z_cols)
         p_cols = [
-            f"sum(__emp_z{ph}) OVER (PARTITION BY "
-            + (part + ", " if part else "")
-            + f"__emp_blk{ph} ORDER BY "
-            + ", ".join(order_sql)
-            + f" {rows_all}) AS __emp_p{ph}"
+            f"sum(__emp_z{ph}) "
+            f"{over_sql([*part, f'__emp_blk{ph}'], order_sql, RUNNING)}"
+            f" AS __emp_p{ph}"
             for ph in ("0", "1")
         ]
         staged = staged.selectExpr("*", *p_cols)
@@ -1133,7 +1126,7 @@ class TSDF:
         def leg(ph: str) -> str:
             sub = (
                 f"CASE WHEN __emp_off{ph} >= {window} THEN "
-                f"coalesce(lag(__emp_p{ph}, {window}) OVER ({ovw}), 0.0D) "
+                f"coalesce(lag(__emp_p{ph}, {window}) {ovw}, 0.0D) "
                 f"ELSE 0.0D END"
             )
             return (
@@ -1143,7 +1136,7 @@ class TSDF:
 
         nan_in_frame = (
             f"(__emp_nc - coalesce(lag(__emp_nc, {window}) "
-            f"OVER ({ovw}), 0)) > 0"
+            f"{ovw}, 0)) > 0"
         )
         ema = (
             f"CASE WHEN {nan_in_frame} THEN cast('NaN' as double) "
@@ -1154,9 +1147,9 @@ class TSDF:
         # the alpha==1 shortcut both go through withColumn): an existing
         # ema_<col> is replaced IN PLACE, not duplicated at the end —
         # a duplicate output name would fail the next resolution
-        out_sql = f"{ema} AS {_bq(out_col)}"
+        out_sql = f"{ema} AS {ident(out_col)}"
         sel = [
-            out_sql if c == out_col else _bq(c) for c in self.df.columns
+            out_sql if c == out_col else ident(c) for c in self.df.columns
         ]
         if out_col not in self.df.columns:
             sel.append(out_sql)

@@ -352,11 +352,11 @@ class TestReviewRegressionsR11:
             t2.forecast_naive("v", 2, "1 minute")
 
     def test_grid6_quantization_and_nan(self, spark):
-        """functions.grid.grid6 — THE shared 1e-6 quantizer: hardened
+        """functions.sql.grid6 — THE shared 1e-6 quantizer: hardened
         floor on reals, NULL for NULL and NaN inputs."""
         import pyspark.sql.functions as F
 
-        from tempo_spark.functions.grid import grid6
+        from tempo_spark.functions.sql import grid6
 
         df = spark.createDataFrame(
             [(1.2345678,), (float("nan"),), (None,), (-1.9999996,)],

@@ -280,6 +280,21 @@ class TestStackedRoundtrip:
         assert len(out) == 1
         assert out[0].metric_name == "metric_1" and out[0].metric_value == 1
 
+    def test_to_stacked_quoted_metric_names(self, spark):
+        """Metric names are pasted into the STACK expression as both a
+        string literal and an identifier: quotes and backticks must be
+        escaped in each."""
+        i = idf(spark, [(ts("2020-01-01 00:00:00"), ts("2020-01-01 00:01:00"), "a", 1, 2)])
+        odd = ["it's", "m`2"]
+        renamed = IntervalsDF(
+            i.df.toDF("start_ts", "end_ts", "series_1", *odd),
+            "start_ts", "end_ts", ["series_1"],
+        )
+        out = renamed.toDF(stack=True).collect()
+        assert sorted((r.metric_name, r.metric_value) for r in out) == [
+            ("it's", 1), ("m`2", 2)
+        ]
+
     def test_union(self, spark):
         a = idf(spark, [(ts("2020-01-01 00:00:00"), ts("2020-01-01 00:01:00"), "a", 1, 2)])
         b = idf(spark, [(ts("2020-01-01 00:02:00"), ts("2020-01-01 00:03:00"), "b", 3, 4)])

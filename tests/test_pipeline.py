@@ -389,30 +389,56 @@ class TestMd5HashFamily:
             }
             assert a == b, fam
 
-    def test_band_key_sql_path_matches_column_path(self, docs):
-        """band_key_array's parsed-SQL fast path (name argument, r13)
-        unrolls the band index but must produce the SAME per-band keys as
-        the transform-over-sequence Column form for BOTH hash families
-        (the md5_32 one is oracle-replayed)."""
-        for fam in ("xxhash64", "md5_32"):
+    def test_band_keys_match_goldens(self, docs):
+        """band_key_array renders the band index UNROLLED in one parsed
+        expression; its keys must stay the recorded goldens for BOTH hash
+        families (the md5_32 one is oracle-replayed). Recorded when a
+        transform-over-sequence Column form still existed and produced
+        the same keys."""
+        x1 = [7348607902549138007, 5537226729408819102,
+              -2556521613930649534, -2718116739688770437]
+        m1 = ["234555507,453250354,326502040,379354069",
+              "1012450783,97915277,179023756,19912458",
+              "643267585,252548594,89652476,954795637",
+              "100207871,1148248534,2154763604,58555995"]
+        golden = {
+            "xxhash64": {
+                0: x1,
+                1: x1,
+                2: [3042449134924550288, -5508141772746431943,
+                    -2556521613930649534, 3198010167011055753],
+                3: [932480985312608814, -8929641210493931648,
+                    -1264414883771712042, 8671943319378077571],
+                4: [3010379813128016991, 1267786707116009971,
+                    -486789909400872257, -4811712514981775110],
+            },
+            "md5_32": {
+                0: m1,
+                1: m1,
+                2: [m1[0], "1359049159,97915277,179023756,19912458",
+                    m1[2], m1[3]],
+                3: ["1246595459,775102929,502190955,610990089",
+                    "852343075,88397657,37919924,140276957",
+                    "130256546,969871476,322660630,170343042",
+                    "867056695,130235259,97252712,633196718"],
+                4: ["690769249,59532982,299435953,221071153",
+                    "38813829,271779845,128891262,652923071",
+                    "237289074,549494568,101089611,1041695743",
+                    "135338569,495588312,126633075,250256610"],
+            },
+        }
+        for fam, want in golden.items():
             sigs = dedup.with_minhash(
                 docs.where("length(text) > 0"), "text", "minhash",
                 16, 3, True, hash_family=fam,
             )
-            a = {
+            got = {
                 r.doc_id: r.bk
                 for r in sigs.select(
                     "doc_id", dedup.band_key_array("minhash", 4, fam).alias("bk")
                 ).collect()
             }
-            b = {
-                r.doc_id: r.bk
-                for r in sigs.select(
-                    "doc_id",
-                    dedup.band_key_array(F.col("minhash"), 4, fam).alias("bk"),
-                ).collect()
-            }
-            assert a == b, fam
+            assert got == want, fam
 
     def test_minhash_dedup_tail_identical_both_families(self, docs):
         """minhash_dedup's verify tail went parsed-SQL (r13): full pair
@@ -3070,6 +3096,23 @@ class TestAssignPacks:
             sampling.assign_packs(df, "n_tokens", 0, ["shard"], "doc_id")
         with pytest.raises(ValueError):
             sampling.assign_packs(df, "n_tokens", 100, [], "doc_id")
+
+    def test_backtick_in_output_name(self, spark):
+        """The output name is pasted into SQL text: a backtick in it must
+        be escaped, not end the quoted identifier."""
+        from tempo_spark.pipeline import sampling
+
+        df = spark.range(40).select(
+            F.col("id").alias("doc_id"),
+            (F.col("id") % 2).alias("shard"),
+            (F.col("id") * 13 % 50 + 1).alias("n_tokens"),
+        )
+        args = (df, "n_tokens", 100, ["shard"], "doc_id")
+        plain = sampling.assign_packs(*args).orderBy("doc_id").collect()
+        odd = sampling.assign_packs(*args, out="pack`no").orderBy("doc_id")
+        assert [r["pack`no"] for r in odd.collect()] == [
+            r.pack_id for r in plain
+        ]
 
 
 class TestEmbeddingStorage:

@@ -1,20 +1,19 @@
-"""r12 optimization pins: the one-parse SQL literal paths build the SAME
-expression trees as the per-element Column forms (bit-identical results),
-and the _local_lloyd sorted-segment centroid update is bit-equal to the
-boolean-mask form it replaced.
+"""r12 optimization pins: the one-parse SQL literal paths keep their
+recorded outputs bit-exact, and the _local_lloyd sorted-segment centroid
+update is bit-equal to the boolean-mask form it replaced.
 
 Plan-build latency is the motivation (guide §7.3 / the repo's parsed-SQL
-discipline): the Column forms cost one py4j round trip per literal —
-measured 16×64 centroids ≈ 2,100 round trips ≈ seconds per plan build —
-while the SQL form is one parse. These tests are the drift fence: any
-divergence between the two construction paths is a correctness bug, not a
-perf regression.
+discipline): per-element Column forms cost one py4j round trip per
+literal — measured 16×64 centroids ≈ 2,100 round trips ≈ seconds per plan
+build — while the SQL form is one parse. The goldens below were recorded
+when those Column forms still existed and agreed bit-for-bit with the SQL
+paths; any divergence is a correctness bug, not a perf regression.
 """
 
+import hashlib
 import random
 import struct
 
-import pyspark.sql.functions as F
 import pytest
 
 from tempo_spark.pipeline.similarity import (
@@ -25,39 +24,46 @@ from tempo_spark.pipeline.similarity import (
 )
 
 
-def _bits(x):
-    return None if x is None else struct.pack("<d", x)
-
-
 @pytest.fixture(scope="module")
 def vec_df(spark):
     rng = random.Random(7)
     rows = [([rng.uniform(-2, 2) for _ in range(17)],) for _ in range(60)]
-    rows.append((None,))  # null vector must NULL through both paths
+    rows.append((None,))  # a null vector NULLs every score
     return spark.createDataFrame(rows, "v array<double>")
 
 
-class TestSqlLiteralPathParity:
-    def test_cell_scores_bit_identical(self, vec_df):
+class TestSqlLiteralPathGoldens:
+    def test_cell_scores_bit_exact(self, vec_df):
         rng = random.Random(3)
         centers = [[rng.uniform(-3, 3) for _ in range(17)] for _ in range(5)]
         # exercise shortest-round-trip formatting on awkward doubles
         centers[0][0] = 1e-17
         centers[1][2] = -123456.789e-3
         centers[2][5] = 2.0 ** -40
-        a = vec_df.select(_cell_scores(F.col("v"), centers).alias("s")).collect()
-        b = vec_df.select(_cell_scores("v", centers).alias("s")).collect()
-        for ra, rb in zip(a, b):
-            assert (ra.s is None) == (rb.s is None)
-            for sa, sb in zip(ra.s or [], rb.s or []):
-                assert _bits(sa.d) == _bits(sb.d)
-                assert sa.cell == sb.cell
+        rows = vec_df.select(_cell_scores("v", centers).alias("s")).collect()
+        h = hashlib.sha256()
+        for r in rows:
+            if r.s is None:
+                h.update(b"N")
+                continue
+            for e in r.s:
+                # the null vector NULLs every d
+                h.update(b"n" if e.d is None else struct.pack("<d", e.d))
+                h.update(struct.pack("<i", e.cell))
+        assert len(rows) == 61
+        assert h.hexdigest() == (
+            "912a876fede4a1cae1a7ca8ed063e77817e0153d5de8e79f34d6c7628721f0a8"
+        )
 
-    def test_hyperplane_bucket_bit_identical(self, vec_df):
+    def test_hyperplane_buckets(self, vec_df):
         planes = random_hyperplanes(17, 6, seed=11)
-        a = vec_df.select(hyperplane_bucket(F.col("v"), planes).alias("b")).collect()
-        b = vec_df.select(hyperplane_bucket("v", planes).alias("b")).collect()
-        assert [r.b for r in a] == [r.b for r in b]
+        got = vec_df.select(hyperplane_bucket("v", planes).alias("b")).collect()
+        assert [r.b for r in got] == [
+            7, 40, 7, 21, 58, 23, 23, 6, 6, 50, 45, 22, 58, 7, 27, 23, 45,
+            19, 54, 44, 9, 5, 19, 36, 18, 5, 21, 36, 37, 4, 57, 10, 26, 51,
+            21, 2, 42, 18, 44, 4, 6, 56, 9, 46, 45, 24, 38, 37, 41, 19, 56,
+            40, 5, 38, 9, 28, 23, 16, 38, 28, 0,
+        ]
 
 
 class TestLloydSortedUpdateParity:

@@ -182,7 +182,7 @@ class TestDedupHelpers:
         srow = sig.collect()[0]
         assert len(srow.sig) == 8
         bands = sig.select(
-            "doc_id", band_key_array(F.col("sig"), 4).alias("bk")
+            "doc_id", band_key_array("sig", 4).alias("bk")
         ).collect()
         assert all(len(r.bk) == 4 for r in bands)
         cands = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
@@ -208,9 +208,7 @@ class TestSimilarityPqHelpers:
             df.select(
                 "id",
                 dot(F.col("v"), F.col("v")).alias("d"),
-                hyperplane_bucket(
-                    F.col("v"), [[1.0, 0.0], [0.0, 1.0]]
-                ).alias("b"),
+                hyperplane_bucket("v", [[1.0, 0.0], [0.0, 1.0]]).alias("b"),
             ).collect(),
             key=lambda r: r.id,
         )
