@@ -45,6 +45,13 @@ def ts_to_double(col: Column, dtype=None) -> Column:
     return col.cast(DoubleType())
 
 
+def ts_double_sql(expr: str, dtype=None) -> str:
+    """SQL text of :func:`ts_to_double` over a SQL fragment."""
+    if dtype is not None and isinstance(dtype, (TimestampNTZType, DateType)):
+        expr = f"cast({expr} as timestamp)"
+    return f"cast({expr} as double)"
+
+
 def ts_double_from(df: DataFrame, col_name: str) -> Column:
     """Schema-aware variant of :func:`ts_to_double`."""
     import pyspark.sql.functions as F  # local alias; F already imported above

@@ -183,10 +183,12 @@ def _two_level_merged(
 
     s_dtype = df.schema[s].dataType
     e_dtype = df.schema[e].dataType
+    # any deterministic per-row bucket partitions the covering sets; the
+    # row's identity (series, start, end) suffices — payload is not hashed
     dfb = df.withColumn(
         "__mb_bk",
         F.pmod(
-            F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_buckets)
+            F.xxhash64(*[F.col(c) for c in [*series, s, e]]), F.lit(n_buckets)
         ),
     )
 
@@ -917,22 +919,21 @@ class IntervalsDF:
                     f"make_disjoint requires timestamp/date/numeric interval "
                     f"boundaries; column {bc!r} is {bdt.simpleString()}"
                 )
-        bin_seconds = (
-            None
-            if merge_buckets is not None
-            else _resolve_bin_seconds(
-                df, self.start_ts, self.end_ts, self.series_ids, bin_seconds
-            )
+        # staging names the pairing fabricates next to the input columns;
+        # an input column with one of them would turn ambiguous
+        reserved = ("__i_", "__mb_") if merge_buckets is not None else ("__i_",)
+        for c in df.columns:
+            if c.startswith(reserved):
+                raise ValueError(f"reserved column name {c} present in input")
+        # with merge_buckets the auto-bin probe is skipped, but the
+        # argument is still validated
+        bin_seconds = _resolve_bin_seconds(
+            df, self.start_ts, self.end_ts, self.series_ids, bin_seconds,
+            allow_binning=merge_buckets is None,
         )
         s, e = self.start_ts, self.end_ts
         series = self.series_ids
         payload = self.observational_columns
-        if merge_buckets is not None:
-            for c in df.columns:
-                if c.startswith("__mb_"):
-                    raise ValueError(
-                        f"reserved column name {c} present in input"
-                    )
         # NEGATIVE RESULT (round 7): a leading repartition(series) — the
         # collapse that wins for resample(fill=True)/interpolate — drops
         # this operator's exchange count from 4 to 2 but measured ~60%

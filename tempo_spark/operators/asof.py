@@ -3,26 +3,32 @@
 For each left (trade) row, attach the most recent right (quote) row with
 ``right.ts <= left.ts`` within the same series. Capability parity with the
 reference's ``asofJoin`` (reference: python/tempo/tsdf.py:752-947),
-re-expressed Spark-first. Three physical strategies:
+re-expressed Spark-first. One kernel plus a range path:
 
-1. **union-window** (default): prefix+pad both sides, ``unionByName``, then
-   one ``last(col, ignoreNulls)`` window per right column over
-   ``Window.partitionBy(series).orderBy(combined_ts, rec_ind[, seq])``.
-   Exactly ONE shuffle (on series_ids) regardless of how many right columns
-   are carried — this is the scale-safe default for large×large joins where
-   a range join would explode.
-2. **range-join** (``use_range_join=True``): compute each right row's
+1. **the union kernel** (:func:`_union_kernel`, default; also
+   ``asofJoinMany``): each side's value columns are packed into ONE struct
+   column per side, the sides are ``union``-ed, and every right column is
+   filled with a running ``last(col, true)`` over
+   ``PARTITION BY series ORDER BY (ts, side)``. Exactly ONE shuffle (on
+   series_ids) however many rights and right columns are carried — the
+   scale-safe default for large×large joins where a range join would
+   explode. Built from parsed SQL text: one parse per output column
+   instead of one py4j round trip per Column node.
+2. **range join** (``use_range_join=True``): compute each right row's
    validity interval ``[ts, lead(ts))`` and equi-join on series ids with a
    ``BETWEEN`` range predicate. With a small right side Catalyst broadcasts
    it, eliminating the shuffle of the (big) left side entirely — the right
-   choice when quotes ≪ trades. We hint ``broadcast()`` when the caller
-   asks for it via ``broadcast_right=True``.
-3. **time-partitioned skew path** (``ts_partition_val``): salt the series
-   key with a time bracket ``floor(ts / val) * val`` and duplicate the
-   trailing ``fraction`` of each bracket into the next so every bracket's
-   window has lookback context. Handles a single monster series that would
-   otherwise pin one task (AQE skew handling does not cover window
-   functions).
+   choice when quotes ≪ trades. Taken only when Catalyst's size estimate
+   says a side is under :data:`SQL_JOIN_OPT_BROADCAST_BYTES` (or no size
+   is known). ``range_join_bin_seconds`` switches it to the **binned**
+   big×big rewrite (time bins join the equi key), taken at any size.
+
+The kernel's **time-partitioned skew path** (``ts_partition_val``) salts
+the series key with a time bracket ``floor(ts / val) * val`` and
+duplicates the trailing ``fraction`` of each bracket into the next so every
+bracket's window has lookback context. Handles a single monster series that
+would otherwise pin one task (AQE skew handling does not cover window
+functions).
 
 Optional ``tolerance`` (seconds) nulls out right columns older than the
 band, matching the reference's post-filter (reference:
@@ -33,50 +39,81 @@ the band applies to ``abs(left_ts - right_ts)``.
 pandas ``merge_asof`` directions: ``"forward"`` attaches the earliest right
 row with ``right.ts >= left.ts``; ``"nearest"`` picks whichever of the
 backward/forward candidates is closer in time (ties -> backward). Both are
-union-window only: one shuffle on series_ids; ``nearest`` adds a second
-in-partition Sort (no extra exchange) because the two directions need
-opposite tie-orders.
+kernel-only. Forward reads the same running ``last(col, true)`` over the
+DESCENDING time order — never a ``[currentRow, unboundedFollowing]``
+frame, which Spark re-aggregates for every row (O(n²) per series).
+``nearest`` computes both orders: one shuffle, two in-partition sorts.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import NamedTuple, Optional, Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import Window
 
-from tempo_spark.functions.sql import RUNNING, ident, over_sql
-from tempo_spark.functions.timestamps import ts_to_double
+from tempo_spark.functions.sql import RUNNING, double_lit, ident, over_sql
+from tempo_spark.functions.timestamps import ts_double_sql, ts_to_double
 
 #: sql_join_opt size cutoff — a side whose Catalyst-estimated plan size
 #: is under this takes the broadcast/range path (reference:
 #: python/tempo/tsdf.py:793-795 uses the same 30 MiB figure)
 SQL_JOIN_OPT_BROADCAST_BYTES = 30 * 1024 * 1024
 
-_REC_IND = "__tempo_rec_ind"
-_CTS = "__tempo_cts"
-_TIE = "__tempo_tie"
+# the kernel's staging columns
+_REC_IND = "__tempo_rec_ind"  # 0 for the left, i for the i-th right
+_CTS = "__tempo_cts"  # the row's own timestamp
+_SEQ = "__tempo_seq"  # the right's sequence_col (single right only)
 _TS_PARTITION = "__tempo_ts_partition"
-_IS_ORIGINAL = "__tempo_is_original"
+_BRACKET = "__tempo_bracket"  # 0 = the row's own time bracket, 1 = a copy
 
 
-def _prefixed(prefix: Optional[str], col: str) -> str:
-    return f"{prefix}_{col}" if prefix else col
+def _side_col(i: int) -> str:
+    return f"__tempo_side{i}"
 
 
-def _prepare_side(tsdf, prefix: Optional[str]):
-    """Rename every non-series column with the side prefix; return
-    (df, ts_col, seq_col, renamed_value_cols)."""
-    mapping = {c: _prefixed(prefix, c) for c in tsdf.df.columns if c not in tsdf.series_ids}
-    df = tsdf.df
-    for old, new in mapping.items():
-        if old != new:
-            df = df.withColumnRenamed(old, new)
-    ts = mapping[tsdf.ts_col]
-    seq = mapping.get(tsdf.sequence_col) if tsdf.sequence_col else None
-    values = [mapping[c] for c in tsdf.df.columns if c not in tsdf.series_ids]
-    return df, ts, seq, values
+class _Side(NamedTuple):
+    """One join input: the caller's TSDF and the output name of each of
+    its non-series columns (``{prefix}_``-renamed when a prefix is set)."""
+
+    tsdf: object
+    names: dict
+
+    @property
+    def ts(self) -> str:
+        return self.names[self.tsdf.ts_col]
+
+    @property
+    def seq(self) -> Optional[str]:
+        return self.names.get(self.tsdf.sequence_col)
+
+    @property
+    def values(self) -> list:
+        return list(self.names.values())
+
+
+def _prepare_side(tsdf, prefix: Optional[str]) -> _Side:
+    return _Side(tsdf, {
+        c: f"{prefix}_{c}" if prefix else c
+        for c in tsdf.df.columns
+        if c not in tsdf.series_ids
+    })
+
+
+def _check_names(series: list, sides: Sequence[_Side]) -> None:
+    """Prefixed names must not collide, nor shadow a staging column (a
+    user column with one of those names would be silently overwritten)."""
+    taken = set(series)
+    for side in sides:
+        clash = taken & set(side.values)
+        if clash:
+            raise ValueError(f"prefixes leave colliding columns: {sorted(clash)}")
+        taken |= set(side.values)
+    staging = {_REC_IND, _CTS, _SEQ, _TS_PARTITION, _BRACKET}
+    reserved = (staging | {_side_col(i) for i in range(len(sides))}) & taken
+    if reserved:
+        raise ValueError(f"reserved column names present in input: {sorted(reserved)}")
 
 
 def _ts_kind_of(tsdf) -> str:
@@ -89,19 +126,33 @@ def _ts_kind_of(tsdf) -> str:
     return "numeric" if isinstance(dt, NumericType) else dt.typeName()
 
 
-def _null_outside_tolerance(df, l_ts, l_dtype, r_ts, r_dtype, r_vals, tol):
-    """Null one right side's columns where the match is older than ``tol``
-    seconds (|left_ts - right_ts| > tol — backward matches are never in
-    the future, so abs() preserves backward semantics while covering
-    forward/nearest). Value columns first, the right ts LAST: the stale
-    predicate reads r_ts, so nulling it first would disarm every later
-    column's check."""
-    age = ts_to_double(F.col(l_ts), l_dtype) - ts_to_double(F.col(r_ts), r_dtype)
-    stale = F.abs(age) > F.lit(float(tol))
-    for c in r_vals:
-        if c != r_ts:
-            df = df.withColumn(c, F.when(stale, F.lit(None)).otherwise(F.col(c)))
-    return df.withColumn(r_ts, F.when(stale, F.lit(None)).otherwise(F.col(r_ts)))
+def _output_sql(
+    series: list,
+    left: _Side,
+    rights: Sequence[_Side],
+    tolerances: Sequence[Optional[float]],
+    ts_dtype,
+    pick=ident,
+) -> list:
+    """The output projection: series, left columns, then each right's
+    columns as ``pick(name)`` — nulled where the match is more than that
+    right's tolerance (seconds) away from the left row, |left_ts -
+    right_ts| > tol (backward matches are never in the future, so abs()
+    preserves backward semantics while covering forward/nearest). This is
+    the reference's post-filter (python/tempo/tsdf.py:919-945)."""
+    out = [ident(c) for c in series + left.values]
+    l_d = ts_double_sql(ident(left.ts), ts_dtype)
+    for side, tol in zip(rights, tolerances):
+        stale = None
+        if tol is not None:
+            r_d = ts_double_sql(pick(side.ts), ts_dtype)
+            stale = f"abs({l_d} - {r_d}) > {double_lit(tol)}"
+        for c in side.values:
+            v = pick(c)
+            if stale is not None:
+                v = f"CASE WHEN {stale} THEN NULL ELSE {v} END"
+            out.append(f"{v} AS {ident(c)}")
+    return out
 
 
 def asof_join(
@@ -150,214 +201,191 @@ def asof_join(
         raise ValueError("skip_nulls=False is not supported with ts_partition_val")
 
     series = list(left.series_ids)
-    ldf, l_ts, l_seq, l_vals = _prepare_side(left, left_prefix)
-    rdf, r_ts, r_seq, r_vals = _prepare_side(right, right_prefix)
-    overlap = set(l_vals) & set(r_vals)
-    if overlap:
-        raise ValueError(f"prefixes leave colliding columns: {sorted(overlap)}")
+    lside = _prepare_side(left, left_prefix)
+    rside = _prepare_side(right, right_prefix)
+    _check_names(series, [lside, rside])
+    ts_dtype = left.df.schema[left.ts_col].dataType
 
-    if use_range_join and range_join_bin_seconds is not None:
-        # big×big path: the bucketized rewrite is correct at ANY size (the
-        # bin becomes the equi key), so the plan-size probe is moot
+    if use_range_join and range_join_bin_seconds is None:
+        # reference behavior (python/tempo/tsdf.py:783-837): the range join
+        # only when a side's estimated plan size is under the cutoff, else
+        # the union kernel — a big×big range join can degenerate to a
+        # nested-loop explosion. Unknown sizes (in-memory relations report
+        # Long.Max) keep the caller's explicit request. The estimate is
+        # memoized by semanticHash: a stale entry picks a slower plan,
+        # never a wrong answer. The binned rewrite skips the probe: it is
+        # correct at any size.
+        from tempo_spark.plans.inspect import plan_size_bytes_cached
+
+        cutoff = SQL_JOIN_OPT_BROADCAST_BYTES
+        l_size = plan_size_bytes_cached(left.df)
+        r_size = plan_size_bytes_cached(right.df)
+        known = [s for s in (l_size, r_size) if s is not None]
+        use_range_join = not known or min(known) < cutoff
+        broadcast_right = broadcast_right or (r_size is not None and r_size < cutoff)
+    if use_range_join:
         joined = _range_join(
-            series, ldf, l_ts, rdf, r_ts, r_vals,
+            series,
+            left.df.withColumnsRenamed(lside.names),
+            lside.ts,
+            right.df.withColumnsRenamed(rside.names),
+            rside.ts,
+            rside.values,
             broadcast_right=broadcast_right,
             bin_seconds=range_join_bin_seconds,
             allow_exact_matches=allow_exact_matches,
         )
-    elif use_range_join:
-        # reference behavior (python/tempo/tsdf.py:783-837): the range-join
-        # path is taken only when a side's estimated plan size is under the
-        # cutoff (30 MiB there); otherwise the union-window path is safer —
-        # a big×big range join can degenerate to a nested-loop explosion.
-        from tempo_spark.plans.inspect import plan_size_bytes
-
-        cutoff = 30 * 2**20
-        r_size = plan_size_bytes(rdf)
-        l_size = plan_size_bytes(ldf)
-        known = [s for s in (l_size, r_size) if s is not None]
-        # fall back to union-window only when sizes are KNOWN to be big;
-        # unknown stats honor the caller's explicit range-join request
-        if known and min(known) >= cutoff:
-            use_range_join = False
-        else:
-            joined = _range_join(
-                series, ldf, l_ts, rdf, r_ts, r_vals,
-                broadcast_right=broadcast_right
-                or (r_size is not None and r_size < cutoff),
-                allow_exact_matches=allow_exact_matches,
-            )
-    if not use_range_join:
-        joined = _union_window_join(
-            series, ldf, l_ts, l_vals, rdf, r_ts, r_seq, r_vals,
+        out = joined.selectExpr(
+            *_output_sql(series, lside, [rside], [tolerance], ts_dtype)
+        )
+    else:
+        out = _union_kernel(
+            series, lside, [rside], [tolerance], ts_dtype,
             skip_nulls=skip_nulls,
+            allow_exact_matches=allow_exact_matches,
+            direction=direction,
             ts_partition_val=ts_partition_val,
             fraction=fraction,
-            direction=direction,
-            allow_exact_matches=allow_exact_matches,
         )
-
-    if tolerance is not None:
-        # reference post-filter (python/tempo/tsdf.py:919-945), shared with
-        # asofJoinMany's per-right tolerances
-        joined = _null_outside_tolerance(
-            joined, l_ts, joined.schema[l_ts].dataType,
-            r_ts, joined.schema[r_ts].dataType, r_vals, tolerance,
-        )
-
-    out_cols = series + [c for c in l_vals] + [c for c in r_vals]
     return TSDF(
-        joined.select(*out_cols),
-        ts_col=l_ts,
+        out,
+        ts_col=lside.ts,
         series_ids=series,
-        sequence_col=l_seq,
+        sequence_col=lside.seq,
         validate=False,
     )
 
 
-def _union_window_join(
-    series: list[str],
-    ldf: DataFrame,
-    l_ts: str,
-    l_vals: list[str],
-    rdf: DataFrame,
-    r_ts: str,
-    r_seq: Optional[str],
-    r_vals: list[str],
+def _union_kernel(
+    series: list,
+    left: _Side,
+    rights: Sequence[_Side],
+    tolerances: Sequence[Optional[float]],
+    ts_dtype,
     *,
     skip_nulls: bool,
-    ts_partition_val: Optional[int],
-    fraction: float,
+    allow_exact_matches: bool,
     direction: str = "backward",
-    allow_exact_matches: bool = True,
+    ts_partition_val: Optional[float] = None,
+    fraction: float = 0.5,
 ) -> DataFrame:
-    # pad each side with the other's value columns as typed nulls, then union
-    r_types = dict(rdf.dtypes)
-    l_types = dict(ldf.dtypes)
-    lpad = ldf.select(
-        *series,
-        *[F.col(c) for c in l_vals],
-        *[F.lit(None).cast(r_types[c]).alias(c) for c in r_vals],
-        F.lit(1).alias(_REC_IND),
-    )
-    rpad = rdf.select(
-        *series,
-        *[F.lit(None).cast(l_types[c]).alias(c) for c in l_vals],
-        *[F.col(c) for c in r_vals],
-        F.lit(-1).alias(_REC_IND),
-    )
-    unioned = lpad.unionByName(rpad)
-    combined_ts = F.coalesce(F.col(l_ts), F.col(r_ts))
+    """The as-of union kernel: ``series + left + rights`` columns, one row
+    per left row.
 
-    part_cols = list(series)
-    if ts_partition_val is not None:
-        unioned, part_cols = _add_time_partitions(
-            unioned, combined_ts, series, ts_partition_val, fraction,
-            ts_dtype=unioned.schema[l_ts].dataType,
-        )
+    Packing: each side's value columns ride the union in ONE struct column
+    per side, so no side pads per column: the ``union`` widens the other
+    sides' NULL struct columns to the struct type. (Catalyst's nested
+    column pruning may still flatten the structs into padded columns
+    below the union; it does on the ticks_asof shape.) Every side carries
+    its own timestamp as the sort key ``_CTS``.
 
-    # Backward: right rows at an equal timestamp sort BEFORE left rows
-    # (rec_ind -1 < 1) so a same-ts quote is visible to the trade — reference
-    # semantics (reference: python/tempo/tsdf.py:884-887). Forward mirrors
-    # it: rights sort AFTER lefts at ties so the (currentRow, following)
-    # frame of a left row still sees a same-ts right row.
-    def _window(dirn: str):
-        # tie order decides same-timestamp visibility: with exact matches
-        # allowed (default, reference semantics) a right row at the left's
-        # own timestamp sorts INSIDE the frame; pandas-style
-        # allow_exact_matches=False flips the tie order so equal-ts rights
-        # fall outside it (strict right.ts < / > left.ts)
-        if dirn == "backward":
-            r_tie = F.col(_REC_IND).asc() if allow_exact_matches else F.col(_REC_IND).desc()
-            order = [combined_ts.asc(), r_tie]
-            frame = (Window.unboundedPreceding, Window.currentRow)
-        else:
-            r_tie = F.col(_REC_IND).desc() if allow_exact_matches else F.col(_REC_IND).asc()
-            order = [combined_ts.asc(), r_tie]
-            frame = (Window.currentRow, Window.unboundedFollowing)
-        if r_seq:
-            order.append(F.col(r_seq).asc())
-        return Window.partitionBy(*part_cols).orderBy(*order).rowsBetween(*frame)
+    Fills: a null struct's field is null, so ``last(side_i.c, true)`` over
+    the running frame sees exactly the rows of side i (plus that side's
+    genuine nulls, which ``skip_nulls=True`` is defined to skip);
+    ``skip_nulls=False`` wraps the value in a struct so a genuine null
+    overwrites (reference: python/tempo/tsdf.py:286-294). Backward runs
+    over ascending time, forward over DESCENDING time — the same growing
+    frame, never a per-row rescan. At equal timestamps the rights sort
+    before the left (rec_ind DESC) so a same-ts right row is visible
+    (reference: python/tempo/tsdf.py:884-887), after it when
+    ``allow_exact_matches=False``. A right's ``sequence_col`` breaks
+    equal-ts ties: the highest wins backward, the lowest forward."""
+    ts_part = ts_partition_val is not None
+    seq = next((r.seq for r in rights if r.seq), None)
+    sides = [left, *rights]
 
-    def _pick(c: str, dirn: str) -> Column:
-        w = _window(dirn)
-        agg = F.last if dirn == "backward" else F.first
+    def pack(i: int, side: _Side) -> DataFrame:
+        cols = [ident(c) for c in series]
+        for j in range(len(sides)):
+            if j == i:
+                fields = ", ".join(
+                    f"{ident(c)} AS {ident(n)}" for c, n in side.names.items()
+                )
+                cols.append(f"struct({fields}) AS {ident(_side_col(j))}")
+            else:
+                cols.append(f"NULL AS {ident(_side_col(j))}")
+        t = side.tsdf
+        cols += [f"{i} AS {ident(_REC_IND)}", f"{ident(t.ts_col)} AS {ident(_CTS)}"]
+        if seq:
+            src = ident(t.sequence_col) if t.sequence_col else "NULL"
+            cols.append(f"{src} AS {ident(_SEQ)}")
+        return t.df.selectExpr(*cols)
+
+    unioned = pack(0, left)
+    for i, side in enumerate(rights, start=1):
+        unioned = unioned.union(pack(i, side))
+
+    partition = [ident(c) for c in series]
+    if ts_part:
+        # salt the series key with time brackets; the trailing `fraction`
+        # of each bracket is copied into the NEXT bracket (_BRACKET = 1) so
+        # its window never starts without lookback context (reference:
+        # python/tempo/tsdf.py:342-383)
+        d = ts_double_sql(ident(_CTS), ts_dtype)
+        val = double_lit(float(ts_partition_val))
+        base = f"floor({d} / {val}) * {val}"
+        tail = double_lit(float(ts_partition_val) * (1.0 - fraction))
+        unioned = unioned.selectExpr(
+            "*",
+            f"posexplode(array({base}, CASE WHEN {d} - {base} >= {tail} "
+            f"THEN {base} + {val} END)) AS ({ident(_BRACKET)}, {ident(_TS_PARTITION)})",
+        ).where(f"{ident(_TS_PARTITION)} IS NOT NULL")
+        partition.append(ident(_TS_PARTITION))
+
+    tie = "DESC" if allow_exact_matches else "ASC"
+
+    def over(dirn: str) -> str:
+        time_order = "ASC" if dirn == "backward" else "DESC"
+        order = [f"{ident(_CTS)} {time_order}", f"{ident(_REC_IND)} {tie}"]
+        if seq:
+            order.append(f"{ident(_SEQ)} {time_order}")
+        return over_sql(partition, order, RUNNING)
+
+    def fill(i: int, c: str, dirn: str) -> str:
+        field = f"{ident(_side_col(i))}.{ident(c)}"
         if skip_nulls:
-            return agg(F.col(c), ignorenulls=True).over(w)
-        # struct wrap distinguishes "no right row yet" (null struct) from a
-        # genuine null value in the right row
-        # (reference: python/tempo/tsdf.py:286-294)
-        wrapped = F.when(F.col(_REC_IND) == -1, F.struct(F.col(c).alias("v")))
-        return agg(wrapped, ignorenulls=True).over(w).getField("v")
-
-    filled = unioned
-    if direction in ("backward", "forward"):
-        for c in r_vals:
-            filled = filled.withColumn(c, _pick(c, direction))
-    else:  # nearest: both candidates, then per-row choose the closer r_ts
-        ts_dtype = unioned.schema[l_ts].dataType
-        for c in r_vals:
-            filled = filled.withColumn(f"__tempo_b_{c}", _pick(c, "backward"))
-            filled = filled.withColumn(f"__tempo_f_{c}", _pick(c, "forward"))
-        l_d = ts_to_double(combined_ts, ts_dtype)
-        b_d = ts_to_double(F.col(f"__tempo_b_{r_ts}"), ts_dtype)
-        f_d = ts_to_double(F.col(f"__tempo_f_{r_ts}"), ts_dtype)
-        # materialize the choice before overwriting/dropping the r_ts temps
-        # it reads (a per-column drop would unresolve later columns)
-        filled = filled.withColumn(
-            "__tempo_choose_fwd",
-            b_d.isNull() | (f_d.isNotNull() & ((l_d - b_d) > (f_d - l_d))),
-        )
-        for c in r_vals:
-            filled = filled.withColumn(
-                c,
-                F.when(F.col("__tempo_choose_fwd"), F.col(f"__tempo_f_{c}")).otherwise(
-                    F.col(f"__tempo_b_{c}")
-                ),
-            )
-        filled = filled.drop(
-            "__tempo_choose_fwd",
-            *[f"__tempo_{d}_{c}" for c in r_vals for d in ("b", "f")],
+            return f"last({field}, true) {over(dirn)}"
+        return (
+            f"(last(CASE WHEN {ident(_REC_IND)} = {i} "
+            f"THEN struct({field} AS v) END, true) {over(dirn)}).v"
         )
 
-    result = filled.where(F.col(_REC_IND) == 1).drop(_REC_IND)
-    if ts_partition_val is not None:
-        result = result.where(F.col(_IS_ORIGINAL) == 1).drop(_IS_ORIGINAL, _TS_PARTITION)
-    return result
+    filled = [ident(c) for c in series]
+    filled += [f"{ident(_side_col(0))}.{ident(c)} AS {ident(c)}" for c in left.values]
+    for i, side in enumerate(rights, start=1):
+        for c in side.values:
+            if direction == "nearest":
+                v = (
+                    f"named_struct('b', {fill(i, c, 'backward')}, "
+                    f"'f', {fill(i, c, 'forward')})"
+                )
+            else:
+                v = fill(i, c, direction)
+            filled.append(f"{v} AS {ident(c)}")
+    keep = f"{ident(_REC_IND)} = 0"
+    if ts_part:
+        filled.append(ident(_BRACKET))
+        keep += f" AND {ident(_BRACKET)} = 0"
+    matched = unioned.selectExpr(*filled, ident(_REC_IND)).where(keep)
 
+    pick = ident
+    if direction == "nearest":
+        # per right, the forward candidate wins only when strictly closer
+        # (ties -> backward); each candidate's own ts decides
+        l_d = ts_double_sql(ident(left.ts), ts_dtype)
+        fwd_of = {}
+        for side in rights:
+            b = ts_double_sql(f"{ident(side.ts)}.b", ts_dtype)
+            f = ts_double_sql(f"{ident(side.ts)}.f", ts_dtype)
+            fwd = f"{b} IS NULL OR ({f} IS NOT NULL AND {l_d} - {b} > {f} - {l_d})"
+            fwd_of.update((c, fwd) for c in side.values)
 
-def _add_time_partitions(
-    unioned: DataFrame,
-    combined_ts: Column,
-    series: list[str],
-    ts_partition_val: int,
-    fraction: float,
-    ts_dtype=None,
-):
-    """Salt the series key with time brackets; duplicate the trailing
-    ``fraction`` of each bracket into the NEXT bracket (is_original=0) so
-    the next bracket's window never starts without lookback context
-    (reference: python/tempo/tsdf.py:342-383)."""
-    val = float(ts_partition_val)
-    dts = ts_to_double(combined_ts, ts_dtype)
-    base = F.floor(dts / val) * F.lit(val)
-    in_overlap_tail = (dts - base) >= F.lit(val * (1.0 - fraction))
-    brackets = F.array(
-        base,
-        F.when(in_overlap_tail, base + F.lit(val)),
+        def pick(c: str) -> str:
+            return f"(CASE WHEN {fwd_of[c]} THEN {ident(c)}.f ELSE {ident(c)}.b END)"
+
+    return matched.selectExpr(
+        *_output_sql(series, left, rights, tolerances, ts_dtype, pick)
     )
-    exploded = (
-        unioned.withColumn("__tempo_brackets", brackets)
-        .withColumn("__tempo_base", base)
-        .withColumn(_TS_PARTITION, F.explode(F.col("__tempo_brackets")))
-        .where(F.col(_TS_PARTITION).isNotNull())
-        .withColumn(
-            _IS_ORIGINAL,
-            (F.col(_TS_PARTITION) == F.col("__tempo_base")).cast("int"),
-        )
-        .drop("__tempo_brackets", "__tempo_base")
-    )
-    return exploded, series + [_TS_PARTITION]
 
 
 def _range_join(
@@ -515,11 +543,9 @@ def asof_join_many(
     """N backward as-of joins in ONE shuffle — the multi-source feature
     join ("attach the latest quote AND the latest sentiment AND the latest
     funding rate to every trade"). Chaining ``asofJoin`` N times costs N
-    shuffles and N sorts of the (growing) left side; this unions ALL sides
-    once, sorts once per series, and computes every right's last-match
-    with ``last(col, ignorenulls)`` over the same window — each right's
-    columns are null on every other side's rows, so the running last()
-    per column naturally tracks that right alone.
+    shuffles and N sorts of the (growing) left side; this runs the union
+    kernel (:func:`_union_kernel`) over ALL sides at once: one union, one
+    sort per series, every right's last-match over the same window.
 
     When it pays (measured, SCALE.md): the saving is N-1 fewer full-left
     SHUFFLES — the network-bandwidth term a real cluster prices highest.
@@ -530,11 +556,7 @@ def asof_join_many(
     in size to the left, the single (N+1)·n-row union sort can spill
     where the chain's two-side stages fit (32.6 s vs 27.7 s chained
     single-node) — on a memory-tight executor, chain huge rights instead,
-    or join the few big rights singly and many-join the rest. To keep the sorted
-    rows narrow, each side's value columns ride the union packed into ONE
-    struct column per side (a null struct costs one fixed-width slot in an
-    UnsafeRow; column-padding would cost a slot per column per side), so
-    shuffle/sort/spill volume is series + keys + each row's OWN payload.
+    or join the few big rights singly and many-join the rest.
 
     ``rights`` maps prefix -> TSDF (all must share the left's series ids
     and ts dtype category). Left columns keep their names; each right's
@@ -553,7 +575,7 @@ def asof_join_many(
     here (sort keys are shared across sides) — use the single
     :func:`asof_join` when a right needs ``sequence_col`` semantics.
 
-    ``strategy``: ``"union"`` — the packed-union single-sort plan above;
+    ``strategy``: ``"union"`` — the single-sort kernel plan above;
     ``"chain"`` — N successive :func:`asof_join` calls (identical results,
     pinned by the chained-equivalence test); ``"auto"`` (default) —
     memoized EXPLAIN-COST size estimates (lazy: an optimizer pass, never
@@ -572,7 +594,8 @@ def asof_join_many(
         )
     if not rights:
         raise ValueError("rights must be a non-empty {prefix: TSDF} mapping")
-    unknown_tol = set(tolerances or {}) - set(rights)
+    tolerances = tolerances or {}
+    unknown_tol = set(tolerances) - set(rights)
     if unknown_tol:
         raise ValueError(f"tolerances for unknown prefixes: {sorted(unknown_tol)}")
 
@@ -592,25 +615,9 @@ def asof_join_many(
                 "for sequence tie-breaking"
             )
 
-    ldf, l_ts, l_seq, l_vals = _prepare_side(left, None)
-    sides = []  # (rec_ind, prefix, df, ts_name, value_names)
-    taken = set(l_vals)
-    for i, (pfx, r) in enumerate(rights.items(), start=1):
-        rdf, r_ts, _r_seq, r_vals = _prepare_side(r, pfx)
-        clash = taken & set(r_vals)
-        if clash:
-            raise ValueError(f"prefixes leave colliding columns: {sorted(clash)}")
-        taken |= set(r_vals)
-        sides.append((i, pfx, rdf, r_ts, r_vals))
-    def side_name(i: int) -> str:
-        return f"__tempo_side{i}"
-
-    side_names = {side_name(i) for i in range(len(sides) + 1)}
-    # staging keys are namespaced like every other internal column; a user
-    # column with one of these names would be silently overwritten
-    reserved = ({_REC_IND, _CTS, _TIE} | side_names) & (taken | set(series))
-    if reserved:
-        raise ValueError(f"reserved column names present in input: {sorted(reserved)}")
+    lside = _prepare_side(left, None)
+    rsides = [_prepare_side(r, pfx) for pfx, r in rights.items()]
+    _check_names(series, [lside, *rsides])
 
     # strategy branch AFTER every validation — the API contract (errors,
     # reserved names, colliding prefixes) must not depend on which plan
@@ -626,95 +633,20 @@ def asof_join_many(
                 right_prefix=pfx,
                 skip_nulls=skip_nulls,
                 allow_exact_matches=allow_exact_matches,
-                tolerance=(tolerances or {}).get(pfx),
+                tolerance=tolerances.get(pfx),
             )
         return out_t
 
-    all_value_cols = list(l_vals) + [
-        c for _i, _p, _d, _t, vals in sides for c in vals
-    ]
-    # (index, struct type, own value cols, source df) per side, left = 0
-    from pyspark.sql.types import StructType
-
-    side_defs = [(0, StructType([ldf.schema[c] for c in l_vals]), l_vals, ldf)]
-    for i, _p, rdf, _ts, vals in sides:
-        side_defs.append((i, StructType([rdf.schema[c] for c in vals]), vals, rdf))
-
-    def pack(df, ind: int):
-        cols = []
-        for j, stype, own, _src in side_defs:
-            if j == ind:
-                cols.append(F.struct(*[F.col(c) for c in own]).alias(side_name(j)))
-            else:
-                cols.append(F.lit(None).cast(stype).alias(side_name(j)))
-        return df.select(*series, *cols, F.lit(ind).alias(_REC_IND))
-
-    unioned = pack(ldf, 0)
-    for i, _p, rdf, _ts, vals in sides:
-        unioned = unioned.unionByName(pack(rdf, i))
-
-    # MATERIALIZE the sort keys before any fill: the fills overwrite each
-    # right's ts column, and a coalesce-over-columns sort key re-resolved
-    # after that would order side N's rows by side N-1's FILLED timestamps
-    # (silently wrong matches). Named key columns pin the order; computing
-    # every fill in ONE select shares a single Sort + Window node.
-    combined_ts = F.coalesce(
-        F.col(side_name(0)).getField(l_ts),
-        *[F.col(side_name(i)).getField(t) for i, _p, _d, t, _v in sides],
+    out = _union_kernel(
+        series, lside, rsides, [tolerances.get(pfx) for pfx in rights],
+        left.df.schema[left.ts_col].dataType,
+        skip_nulls=skip_nulls,
+        allow_exact_matches=allow_exact_matches,
     )
-    # rights sort BEFORE the left at equal ts when exact matches are
-    # allowed (same-ts rows visible), AFTER it when strict
-    is_left = (F.col(_REC_IND) == 0).cast("int")
-    keyed = unioned.withColumn(_CTS, combined_ts).withColumn(_TIE, is_left)
-
-    # the fill expressions are PARSED SQL, not Column-API compositions:
-    # this operator's target shape is many rights × several columns each,
-    # and N windowed Column objects cost ~6 py4j round-trips apiece at
-    # plan-build time (the simhash/minhash lesson — audit any operator
-    # building >30 Columns in a loop); one parser call per column builds a
-    # bit-identical plan. Fields come out of the side structs: a null
-    # struct's field is null, so last(..., ignorenulls) sees exactly the
-    # rows of that side (plus that side's genuine nulls, which
-    # skip_nulls=True is defined to skip).
-    over = over_sql(
-        [ident(s) for s in series],
-        [
-            f"{ident(_CTS)} ASC",
-            f"{ident(_TIE)} " + ("ASC" if allow_exact_matches else "DESC"),
-        ],
-        RUNNING,
-    )
-    sel_for: dict[str, str] = {}
-    for c in l_vals:
-        sel_for[c] = f"{ident(side_name(0))}.{ident(c)}"
-    for i, _p, _rdf, _ts, vals in sides:
-        sref = ident(side_name(i))
-        for c in vals:
-            if skip_nulls:
-                sel_for[c] = f"last({sref}.{ident(c)}, true) {over}"
-            else:
-                sel_for[c] = (
-                    f"(last(CASE WHEN {ident(_REC_IND)} = {i} "
-                    f"THEN struct({sref}.{ident(c)} AS v) END, true) {over}).v"
-                )
-    filled = keyed.select(
-        *series,
-        *[F.expr(sel_for[c]).alias(c) for c in all_value_cols],
-        _REC_IND,
-    )
-    out = filled.where(F.col(_REC_IND) == 0).drop(_REC_IND)
-    if tolerances:
-        l_dtype = ldf.schema[l_ts].dataType
-        for i, pfx, rdf, r_ts, vals in sides:
-            tol = tolerances.get(pfx)
-            if tol is not None:
-                out = _null_outside_tolerance(
-                    out, l_ts, l_dtype, r_ts, rdf.schema[r_ts].dataType, vals, tol
-                )
     return TSDF(
-        out.select(*series, *all_value_cols),
-        ts_col=l_ts,
+        out,
+        ts_col=lside.ts,
         series_ids=series,
-        sequence_col=l_seq,
+        sequence_col=lside.seq,
         validate=False,
     )

@@ -8,10 +8,10 @@ python/tempo/interpol.py:115-448), Spark-first:
    generates exactly the missing buckets between consecutive rows — no
    driver loop, no join against a global calendar (the grid is generated
    in-partition from the data itself),
-3. scaffold prev/next non-null values per target column with
-   ``last(..., ignorenulls)`` / ``first(..., ignorenulls)`` windows — both
-   directions share ONE shuffle on series_ids (the frames differ, not the
-   partitioning),
+3. scaffold prev/next non-null values per target column with a running
+   ``last(..., ignorenulls)`` over ascending / descending time — both
+   directions share ONE shuffle on series_ids (the sort order differs, not
+   the partitioning),
 4. fill with native ``when`` expressions (no Python workers anywhere).
 
 Output flags match the reference contract: ``is_ts_interpolated`` plus one
@@ -87,9 +87,14 @@ def interpolate(
         df = df.withColumn(c, F.when(~F.col("is_ts_interpolated"), F.col(c)))
     df = df.drop(ts).withColumnRenamed("__new_ts", ts)
 
-    wg = Window.partitionBy(*series).orderBy(F.col(ts))
-    w_back = wg.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_fwd = wg.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    # running frames only: previous values read the ascending order, next
+    # values the DESCENDING one (timestamps are unique per series after
+    # resample). A [currentRow, unboundedFollowing] frame would give the
+    # same values, but Spark re-aggregates it for every row: O(n²).
+    wg = Window.partitionBy(*series)
+    running = (Window.unboundedPreceding, Window.currentRow)
+    w_back = wg.orderBy(F.col(ts)).rowsBetween(*running)
+    w_next = wg.orderBy(F.col(ts).desc()).rowsBetween(*running)
 
     filled = df
     for c in targets:
@@ -102,19 +107,19 @@ def interpolate(
         elif method == "ffill":
             new_val = F.last(val, ignorenulls=True).over(w_back)
         elif method == "bfill":
-            new_val = F.first(val, ignorenulls=True).over(w_fwd)
+            new_val = F.last(val, ignorenulls=True).over(w_next)
         else:  # linear
             ts_dtype = filled.schema[ts].dataType
             prev_v = F.last(val, ignorenulls=True).over(w_back)
-            next_v = F.first(val, ignorenulls=True).over(w_fwd)
+            next_v = F.last(val, ignorenulls=True).over(w_next)
             prev_t = F.last(
                 F.when(val.isNotNull(), ts_to_double(F.col(ts), ts_dtype)),
                 ignorenulls=True,
             ).over(w_back)
-            next_t = F.first(
+            next_t = F.last(
                 F.when(val.isNotNull(), ts_to_double(F.col(ts), ts_dtype)),
                 ignorenulls=True,
-            ).over(w_fwd)
+            ).over(w_next)
             t = ts_to_double(F.col(ts), ts_dtype)
             interp = prev_v + (next_v - prev_v) * (t - prev_t) / (next_t - prev_t)
             new_val = F.when(

@@ -81,40 +81,6 @@ def count_exchanges(df: DataFrame) -> int:
     return len(re.findall(r"Arguments: hashpartitioning", plan))
 
 
-#: memoized series-clustering probe results keyed by (semanticHash, keys) —
-#: a plan-CHOICE statistic only: a stale or collided entry picks a slower
-#: plan, never wrong results. Bounded for long-lived drivers. NOTE: the
-#: round-7 automatic exchange-collapse experiments that consumed this were
-#: REVERTED after same-session A/Bs measured them slower (map-side-combined
-#: partial shuffles beat one raw-row repartition on every tested shape —
-#: see the negative-result notes in operators/resample.py and
-#: intervals.make_disjoint). The probe stays for plan tooling/tests.
-_CLUSTERED_CACHE: dict = {}
-_CLUSTERED_CACHE_MAX = 512
-
-
-def is_series_clustered(df: DataFrame, series: list) -> bool:
-    """True when ``df``'s physical plan already PROVIDES hash clustering
-    compatible with grouping by ``series``: a ``groupBy(series)`` probe
-    plan compiles with zero exchanges. Detects bucketed scans and frames
-    whose topmost shuffle was keyed by a series subset (a prior
-    aggregation/window on these keys). A bare upstream
-    ``df.repartition(series)`` node reads as NOT clustered (the probe
-    counts the repartition's own exchange). Compiles one explain (no jobs
-    run); memoized like the make_disjoint auto-bin probe."""
-    import pyspark.sql.functions as F
-
-    key = (df.semanticHash(), tuple(series))
-    if key not in _CLUSTERED_CACHE:
-        if len(_CLUSTERED_CACHE) >= _CLUSTERED_CACHE_MAX:
-            _CLUSTERED_CACHE.clear()
-        probe = df.groupBy(*[F.col(c) for c in series]).agg(
-            F.count(F.lit(1))
-        )
-        _CLUSTERED_CACHE[key] = count_exchanges(probe) == 0
-    return _CLUSTERED_CACHE[key]
-
-
 def count_python_evals(df: DataFrame) -> int:
     """Number of Python-worker operators (row/Arrow UDF eval, pandas
     group-map / map-iter) in the physical plan. The repo invariant is ZERO

@@ -413,10 +413,13 @@ class TSDF:
         (reference: python/tempo/tsdf.py:752-947); ``direction`` extends to
         forward/nearest matches (pandas ``merge_asof`` semantics, beyond the
         reference). See ``tempo_spark.operators.asof`` for strategies and
-        scale notes. ``range_join_bin_seconds`` (with ``sql_join_opt=True``)
-        switches the range join to the bucketized big×big rewrite: both
-        sides keyed by ``ts div bin`` so the plan stays a hash join at any
-        size instead of degrading to a nested-loop / hot sort-merge group.
+        scale notes. ``sql_join_opt=True`` asks for the range/broadcast
+        join; it is taken when no size estimate is known or some known side
+        is under the 30 MiB cutoff. ``range_join_bin_seconds`` (with
+        ``sql_join_opt=True``) switches the range join to the bucketized
+        big×big rewrite: both sides keyed by ``ts div bin`` so the plan
+        stays a hash join at any size instead of degrading to a nested-loop
+        / hot sort-merge group.
         ``allowExactMatches=False`` (pandas ``merge_asof`` parity, beyond
         the reference) makes the comparison STRICT — a right row at the
         left's exact timestamp is skipped in every direction and strategy.
@@ -429,35 +432,8 @@ class TSDF:
         join result (a deliberate action) and log a warning for each right
         column that matched nothing; ``suppress_null_warning`` is accepted
         for API compatibility and implies nothing when the check is off."""
-        from tempo_spark.operators.asof import (
-            SQL_JOIN_OPT_BROADCAST_BYTES,
-            asof_join,
-        )
+        from tempo_spark.operators.asof import asof_join
 
-        # reference semantics (python/tempo/tsdf.py:787-795): sql_join_opt
-        # probes BOTH plans' estimated sizeInBytes and takes the
-        # broadcast/range path only when a side is under the 30 MiB
-        # cutoff, else falls back to the union-window strategy. The probe
-        # is memoized by semanticHash (plan-choice statistic — a stale
-        # entry picks a slower plan, never a wrong answer). Frames without
-        # a usable estimate (in-memory relations report Long.Max) keep the
-        # user's explicit range request — override only on evidence that
-        # BOTH sides are big. An explicit range_join_bin_seconds skips the
-        # probe: the binned rewrite exists precisely for big×big sides the
-        # cutoff would route away.
-        use_range_join = sql_join_opt
-        if sql_join_opt and range_join_bin_seconds is None and direction == "backward":
-            from tempo_spark.plans.inspect import plan_size_bytes_cached
-
-            lb = plan_size_bytes_cached(self.df)
-            rb = plan_size_bytes_cached(right.df)
-            both_known_big = (
-                lb is not None
-                and rb is not None
-                and lb >= SQL_JOIN_OPT_BROADCAST_BYTES
-                and rb >= SQL_JOIN_OPT_BROADCAST_BYTES
-            )
-            use_range_join = not both_known_big
         result = asof_join(
             self,
             right,
@@ -466,7 +442,7 @@ class TSDF:
             ts_partition_val=tsPartitionVal,
             fraction=fraction,
             skip_nulls=skipNulls,
-            use_range_join=use_range_join,
+            use_range_join=sql_join_opt,
             tolerance=tolerance,
             direction=direction,
             range_join_bin_seconds=range_join_bin_seconds,

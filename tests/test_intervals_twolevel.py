@@ -167,3 +167,27 @@ def test_merge_buckets_validation(spark):
             df.withColumn("__mb_bk", F.lit(1)),
             "start_ts", "end_ts", ["k"],
         ).make_disjoint(merge_buckets=4)
+
+
+def test_bin_seconds_spelling_checked_with_merge_buckets(spark):
+    # merge_buckets skips the auto-bin probe, not the argument check
+    from tempo_spark import IntervalsDF
+
+    df = _dense_frame(spark, n_rows=100, n_series=5, span_steps=3)
+    idf = IntervalsDF(df, "start_ts", "end_ts", ["k"])
+    with pytest.raises(ValueError, match="bin_seconds"):
+        idf.make_disjoint(bin_seconds="bogus", merge_buckets=4)
+
+
+@pytest.mark.parametrize("merge_buckets", [None, 4])
+@pytest.mark.parametrize("name", ["__i_end", "__i_start_d"])
+def test_interval_staging_names_reserved(spark, merge_buckets, name):
+    # both pairing paths stage __i_* columns next to the payload
+    from tempo_spark import IntervalsDF
+
+    df = _dense_frame(spark, n_rows=100, n_series=5, span_steps=3)
+    idf = IntervalsDF(
+        df.withColumn(name, F.col("m2")), "start_ts", "end_ts", ["k"]
+    )
+    with pytest.raises(ValueError, match="reserved"):
+        idf.make_disjoint(bin_seconds=None, merge_buckets=merge_buckets)

@@ -97,6 +97,20 @@ class TestGridRenders:
         assert got[5] == 0.0 and got[6] == 0.0  # half-up: floor(x*1e6+0.5)
         assert got[7] == 123456.789013
 
+    @pytest.mark.parametrize("dtype", ["timestamp", "timestamp_ntz", "date", "bigint"])
+    def test_ts_double_renders_plan_identically(self, spark, dtype):
+        from pyspark.sql.types import _parse_datatype_string
+
+        from tempo_spark.functions.timestamps import ts_double_sql, ts_to_double
+
+        src = "id * 86400 + 1" if dtype == "bigint" else "timestamp_seconds(id * 86400 + 1)"
+        df = spark.range(3).selectExpr(f"cast({src} as {dtype}) AS t")
+        dt = _parse_datatype_string(dtype)
+        a = df.select(ts_to_double(F.col("t"), dt).alias("d"))
+        b = df.select(F.expr(ts_double_sql(ident("t"), dt)).alias("d"))
+        assert _plan(a) == _plan(b)
+        assert a.collect() == b.collect()
+
     def test_key_is_the_scaled_grid(self, vals):
         both = vals.select(grid6("v").alias("g"), grid6_key("v").alias("k"))
         assert both.dtypes == [("g", "double"), ("k", "bigint")]

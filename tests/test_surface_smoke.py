@@ -126,7 +126,6 @@ class TestPlanInspectors:
     def test_pushed_filters_and_clustering(self, spark, tmp_path):
         from tempo_spark.plans.inspect import (
             has_pushed_filters,
-            is_series_clustered,
             plan_size_bytes_cached,
         )
 
@@ -135,13 +134,6 @@ class TestPlanInspectors:
         df = spark.read.parquet(p)
         assert has_pushed_filters(df.where(F.col("id") > 50))
         assert not has_pushed_filters(df)
-        assert not is_series_clustered(df, ["k"])
-        # documented contract: a bare repartition node reads as NOT
-        # clustered (the probe counts its exchange); a source whose
-        # partitioning already satisfies the grouping (spark.range's
-        # RangePartitioning — the r4 lesson) reads as clustered
-        assert not is_series_clustered(df.repartition("k"), ["k"])
-        assert is_series_clustered(spark.range(10), ["id"])
         size = plan_size_bytes_cached(df)
         assert size is None or size > 0
 
