@@ -47,6 +47,7 @@ frame, which Spark re-aggregates for every row (O(n²) per series).
 
 from __future__ import annotations
 
+import math
 from typing import NamedTuple, Optional, Sequence
 
 import pyspark.sql.functions as F
@@ -116,6 +117,16 @@ def _check_names(series: list, sides: Sequence[_Side]) -> None:
         raise ValueError(f"reserved column names present in input: {sorted(reserved)}")
 
 
+def _tolerance(tol: Optional[float]) -> Optional[float]:
+    """A tolerance in seconds; ``+inf`` means no band (None). NaN and
+    ``-inf`` have no meaning as a band and are rejected."""
+    if tol is None or tol == float("inf"):
+        return None
+    if not math.isfinite(tol):
+        raise ValueError(f"tolerance must be a finite number or +inf, got {tol!r}")
+    return tol
+
+
 def _ts_kind_of(tsdf) -> str:
     """Timestamp dtype category for join compatibility checks: every
     numeric type is one category (epoch numbers compare fine), otherwise
@@ -176,6 +187,7 @@ def asof_join(
         raise ValueError(
             f"direction must be backward/forward/nearest, got {direction!r}"
         )
+    tolerance = _tolerance(tolerance)
     if direction != "backward" and (use_range_join or ts_partition_val is not None):
         raise ValueError(
             "forward/nearest as-of joins support only the union-window strategy"
@@ -307,7 +319,9 @@ def _union_kernel(
         t = side.tsdf
         cols += [f"{i} AS {ident(_REC_IND)}", f"{ident(t.ts_col)} AS {ident(_CTS)}"]
         if seq:
-            src = ident(t.sequence_col) if t.sequence_col else "NULL"
+            # only the right's seq: a left seq would widen against it in the
+            # union (timestamp vs bigint fails, string vs bigint sorts as text)
+            src = ident(t.sequence_col) if i > 0 and t.sequence_col else "NULL"
             cols.append(f"{src} AS {ident(_SEQ)}")
         return t.df.selectExpr(*cols)
 
@@ -598,6 +612,7 @@ def asof_join_many(
     unknown_tol = set(tolerances) - set(rights)
     if unknown_tol:
         raise ValueError(f"tolerances for unknown prefixes: {sorted(unknown_tol)}")
+    tolerances = {pfx: _tolerance(t) for pfx, t in tolerances.items()}
 
     series = list(left.series_ids)
     for pfx, r in rights.items():

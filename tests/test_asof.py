@@ -78,6 +78,17 @@ class TestAsofJoinDefault:
         assert rows[("S1", "2020-09-01 00:19:12")].right_ask_pr is None
         assert rows[("S1", "2020-09-01 00:19:12")].right_event_ts is None
 
+    def test_tolerance_infinite_and_invalid(self, trades_tsdf, quotes_tsdf):
+        # +inf is no band at all; NaN and -inf are rejected up front
+        inf = trades_tsdf.asofJoin(quotes_tsdf, left_prefix="left", tolerance=float("inf"))
+        none = trades_tsdf.asofJoin(quotes_tsdf, left_prefix="left")
+        assert sorted(inf.df.collect()) == sorted(none.df.collect())
+        for bad in (float("nan"), float("-inf")):
+            with pytest.raises(ValueError, match="tolerance must be"):
+                trades_tsdf.asofJoin(quotes_tsdf, left_prefix="left", tolerance=bad)
+            with pytest.raises(ValueError, match="tolerance must be"):
+                trades_tsdf.asofJoinMany({"q": quotes_tsdf}, tolerances={"q": bad})
+
     def test_sequence_col_tiebreak(self, spark):
         left = TSDF(
             spark.createDataFrame(
@@ -100,6 +111,37 @@ class TestAsofJoinDefault:
         out = left.asofJoin(right, left_prefix="left").df.collect()
         # highest sequence number at equal ts wins
         assert out[0].right_q == 200.0 and out[0].right_seq_nb == 2
+
+    @pytest.mark.parametrize(
+        "lseq_type, lseq", [("string", "x"), ("timestamp", ts("2020-01-02 00:00:00"))]
+    )
+    def test_sequence_col_tiebreak_left_seq_other_type(self, spark, lseq_type, lseq):
+        # the left's own sequence_col must not share the right's tie-break
+        # column: widened together, timestamp vs bigint fails analysis and
+        # string vs bigint sorts '9' above '10'
+        left = TSDF(
+            spark.createDataFrame(
+                [("A", ts("2020-01-01 00:00:10"), lseq, 1.0)],
+                f"k string, event_ts timestamp, lseq {lseq_type}, v double",
+            ),
+            series_ids=["k"],
+            sequence_col="lseq",
+        )
+        right = TSDF(
+            spark.createDataFrame(
+                [
+                    ("A", ts("2020-01-01 00:00:10"), 10, 100.0),
+                    ("A", ts("2020-01-01 00:00:10"), 9, 90.0),
+                ],
+                "k string, event_ts timestamp, seq_nb long, q double",
+            ),
+            series_ids=["k"],
+            sequence_col="seq_nb",
+        )
+        back = left.asofJoin(right, left_prefix="left").df.collect()
+        assert back[0].right_seq_nb == 10 and back[0].right_q == 100.0
+        fwd = left.asofJoin(right, left_prefix="left", direction="forward")
+        assert fwd.df.collect()[0].right_seq_nb == 9
 
     def test_mismatched_series_raises(self, trades_tsdf, spark):
         other = TSDF(
@@ -406,6 +448,14 @@ class TestAsofDirections:
 
         left, right = lr
         out = left.asofJoin(right, left_prefix="left", direction="nearest")
+        assert count_exchanges(out.df) == 1
+
+    @pytest.mark.parametrize("direction", ["backward", "forward"])
+    def test_one_shuffle_backward_forward(self, lr, direction):
+        from tempo_spark.plans.inspect import count_exchanges
+
+        left, right = lr
+        out = left.asofJoin(right, left_prefix="left", direction=direction)
         assert count_exchanges(out.df) == 1
 
 
